@@ -1,4 +1,5 @@
-"""Benchmark: headline queries at $SPARK_GRAFT_SF_DIR on local[$SPARK_GRAFT_CPUS].
+"""Benchmark: headline queries at $SPARK_GRAFT_SF_DIR on local[$SPARK_GRAFT_CPUS]
+(default: every CPU).
 
 Prints ONE JSON line:
     {"metric": "total_bench_seconds", "value": N, "unit": "sec",
@@ -124,6 +125,8 @@ def main() -> None:
     deletion), and that, not host contention, floors a co-resident probe.
     A deliberately idle resident JVM costs only ~5% (A/B-tested), so the
     teardown activity is the whole effect."""
+    from mmgraphrag_spark.session import default_cpus
+
     if os.environ.get("SPARK_GRAFT_BENCH_CHILD") != "1":
         import subprocess
 
@@ -142,13 +145,13 @@ def main() -> None:
             sys.exit(child.returncode or 1)
         result = json.loads(line)
         result["host_probe_mrows_post"] = _standalone_probe_mrows(
-            int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+            default_cpus()
         )
         print(json.dumps(result))
         return
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     replicas = int(os.environ.get("SPARK_GRAFT_REPLICAS", "1"))
 
     from mmgraphrag_spark.session import build_session

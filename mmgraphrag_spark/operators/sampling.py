@@ -18,6 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def hash_bucket(id_col: Column, seed: str) -> Column:
@@ -91,15 +92,24 @@ def stratified_sample(
     original columns survive."""
     b = hash_bucket(F.col(id_col), seed)
     if len(rates_per_256) > max_case_strata:
-        spark = df.sparkSession
-        rates = spark.createDataFrame(
+        # the threshold column must not shadow an input column (Spark
+        # resolves names case-insensitively), and the stratum key keeps its
+        # real type so the join matches exactly what the CASE path compares
+        taken = {c.lower() for c in df.columns}
+        thr = "_thr"
+        while thr in taken:
+            thr = "_" + thr
+        rates = df.sparkSession.createDataFrame(
             [(v, _hex2(r)) for v, r in sorted(rates_per_256.items())],
-            f"`{stratum_col}` string, _thr string",
+            T.StructType([
+                T.StructField(stratum_col, df.schema[stratum_col].dataType),
+                T.StructField(thr, T.StringType()),
+            ]),
         )
         return (
             df.join(F.broadcast(rates), stratum_col, "left")
-            .filter(b < F.coalesce(F.col("_thr"), F.lit(_hex2(default_rate_per_256))))
-            .drop("_thr")
+            .filter(b < F.coalesce(F.col(thr), F.lit(_hex2(default_rate_per_256))))
+            .drop(thr)
             # the using-column join reorders stratum_col first; restore
             .select(*df.columns)
         )

@@ -10,25 +10,41 @@ Embedding backend is the M1 seam: a vectorized pandas UDF. Offline mode uses
 deterministic feature hashing (token -> signed bucket) of the same shape a
 sentence-transformer backend would produce; swap ``embed_fn`` for a real model.
 
-Scale notes: the entity VDB is an embeddings table; ANN is a broadcast of the
-(single) query vector against it — one scan, no shuffle until top-k ranking.
-Degree is a two-way explode + groupBy (one shuffle). All later joins key on
-entity_name / chunk_id with the query-side relation tiny -> broadcast.
+Scale notes: the entity VDB is an embeddings table; ANN is the (single) query
+vector against it — one scan, ranked as a per-partition top-k. Everything
+after it reads only the seeds' neighbourhood, as the reference reads only the
+seeds' nodes and edges from graph storage: ``local_query`` runs a few key-set
+lookups (filtered scans, one Spark job each, no shuffle) — the edges touching
+the seeds, the entity rows of the seeds and their 1-hop neighbours, the
+endpoints of the edges touching those (their exact degrees, counted on the
+driver), the media_spans rows of the neighbours' media refs, the seeds'
+chunks — and ranks and cuts those bounded rows in plain Python. A question
+costs the same on a KG of any size with the same seed neighbourhoods, and
+holds no Spark state after it returns. The distributed operators below
+(node_degrees, seed_entities, one_hop_neighbors, related_text_units,
+related_edges) state the same rules as whole-table plans; the oracle queries
+and the local_query equivalence tests run them.
 """
 
 from __future__ import annotations
 
+import base64
 import hashlib
+import json
+import re
+from collections import Counter, defaultdict
 from typing import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from mmgraphrag_spark.functions.vectors import cosine_similarity_col
 from mmgraphrag_spark.schema import EMBED_DIM
 
+TEXT_UNIT_BUDGET, EDGE_BUDGET = 4000, 6000  # context token budgets (A10)
 
 # ---------------------------------------------------------------------------
 # M1: embedding backend (deterministic feature hashing; pluggable)
@@ -257,7 +273,7 @@ def related_text_units(
     entities: DataFrame,
     edges: DataFrame,
     chunks: DataFrame,
-    budget_tokens: int = 4000,
+    budget_tokens: int = TEXT_UNIT_BUDGET,
     media: DataFrame | None = None,
 ) -> DataFrame:
     """J12 + W4 + A10 (query.py:63-155): seed source chunks scored by how many
@@ -339,7 +355,7 @@ def related_text_units(
 def related_edges(
     seeds: DataFrame,
     edges: DataFrame,
-    budget_tokens: int = 6000,
+    budget_tokens: int = EDGE_BUDGET,
     degrees: DataFrame | None = None,
 ) -> DataFrame:
     """W5 + A10 (query.py:157-209): all seed edges ranked by (edge degree,
@@ -383,25 +399,150 @@ def related_edges(
 
 
 # ---------------------------------------------------------------------------
+# per-question path: bounded lookups, then driver-side ranking
+# ---------------------------------------------------------------------------
+
+def _struct(**types) -> T.StructType:
+    return T.StructType([T.StructField(n, t) for n, t in types.items()])
+
+
+# local_query's rows; seeds come out in rank order, the rest in context order
+_S = T.StringType()
+SEEDS = _struct(entity_name=_S, entity_type=_S, description=_S, source_ids=T.ArrayType(_S),
+                sim=T.DoubleType(), rnk=T.IntegerType(), degree=T.LongType())
+TEXT_UNITS = _struct(chunk_id=_S, content=_S, order=T.IntegerType(),
+                     relation_counts=T.LongType())
+RANKED_EDGES = _struct(src=_S, tgt=_S, description=_S, weight=T.DoubleType(),
+                       edge_rank=T.LongType())
+
+# Spark's split(description, "\\s+") is a Java regex: ASCII whitespace only
+_WS = re.compile(r"\s+", re.ASCII)
+
+
+def _lookup(df: DataFrame, keys, key_cols: tuple, cols: tuple) -> list:
+    """``cols`` of the rows of ``df`` whose value in any of ``key_cols`` is
+    in ``keys``: one filtered scan (one Spark job, no shuffle), none at all
+    for an empty key set. The keys travel as ONE JSON literal that constant
+    folding turns into an array constant; a literal Column per key costs a
+    Py4J round trip each (~0.6 ms), and a hub's neighbourhood has hundreds."""
+    if not keys:
+        return []
+    wanted = F.from_json(F.lit(json.dumps(sorted(keys))), "array<string>")
+    hit = F.array_contains(wanted, F.col(key_cols[0]))
+    for c in key_cols[1:]:
+        hit = hit | F.array_contains(wanted, F.col(c))
+    return df.filter(hit).select(*cols).collect()
+
+
+def _within_budget(rows: list, tokens: list, budget: int) -> list:
+    """A10: keep the rows whose running token sum is <= budget (the window
+    path's ``_cum <= budget`` filter)."""
+    out, cum = [], 0
+    for row, t in zip(rows, tokens):
+        cum += t
+        if cum <= budget:
+            out.append(row)
+    return out
+
+
+def _rank_text_units(
+    seeds: list, pairs: set, ents: dict, chunks: DataFrame,
+    media_spans: DataFrame | None, budget: int,
+) -> list:
+    """related_text_units over the bounded rows: seed chunks scored by the
+    1-hop neighbours citing them (J12; the J13 media rewrite and the
+    per-(seed, neighbor, chunk) set only when ``media_spans`` is given),
+    ordered (best seed rank, relation count desc, chunk_id), cut to the
+    budget."""
+    best: dict[str, int] = {}  # seed chunk -> min seed rank
+    for s in seeds:
+        for c in s[3]:
+            if c is not None and c.startswith("chunk-"):
+                best[c] = min(best.get(c, s[5]), s[5])
+    cited = [
+        (seed, nbr, c)
+        for seed, nbr in pairs
+        for e in ents.get(nbr, ())
+        for c in e[3]
+    ]
+    if media_spans is not None:
+        refs = {c for _, _, c in cited if c is not None and not c.startswith("chunk-")}
+        home: dict[str, str] = {}  # media ref -> min associated chunk
+        for ref, c in _lookup(media_spans, refs, ("media_ref",), ("media_ref", "chunk_id")):
+            if c is not None and (ref not in home or c < home[ref]):
+                home[ref] = c
+        cited = {
+            (seed, nbr, c if c is not None and c.startswith("chunk-") else home.get(c))
+            for seed, nbr, c in cited
+        }
+    counts = Counter(c for _, _, c in cited)
+    found = _lookup(chunks, best.keys(), ("chunk_id",), ("chunk_id", "content", "tokens"))
+    ranked = sorted(found, key=lambda r: (best[r[0]], -counts[r[0]], r[0]))
+    return _within_budget(
+        [(c, content, best[c], counts[c]) for c, content, _ in ranked],
+        [r[2] for r in ranked],
+        budget,
+    )
+
+
+def _rank_edges(seed_edges: list, degree: Counter, budget: int) -> list:
+    """related_edges over the bounded rows (W5): rank = sum of the endpoint
+    degrees; ordered (rank desc, weight desc, src, tgt), cut to the budget."""
+    ranked = sorted(
+        ((s, t, d, w, degree[s] + degree[t]) for s, t, w, d in seed_edges),
+        key=lambda e: (-e[4], -e[3], e[0], e[1]),
+    )
+    return _within_budget(ranked, [len(_WS.split(e[2])) for e in ranked], budget)
+
+
+def _image_payloads(
+    seeds: list, media: DataFrame | None, limit: int = 3
+) -> list[tuple[str, str | None]]:
+    """W7 + the reference's base64 image hand-off (query.py:434-436): the
+    first ``limit`` ORI_IMG seeds by rank -> [(entity_name, image_b64 |
+    None)], the image being the least content among the media rows of the
+    entity's non-chunk source ids."""
+    imgs = [s for s in seeds if s[1] == '"ORI_IMG"'][:limit]
+    if media is None:
+        return [(s[0], None) for s in imgs]
+    refs = defaultdict(set)
+    for s in imgs:
+        refs[s[0]].update(
+            c for c in s[3] if c is not None and not c.startswith("chunk-")
+        )
+    blobs = defaultdict(list)
+    wanted = set().union(*refs.values())
+    for ref, blob in _lookup(media, wanted, ("media_ref",), ("media_ref", "content")):
+        if blob is not None:
+            blobs[ref].append(bytes(blob))
+    out = []
+    for s in imgs:
+        found = [b for r in refs[s[0]] for b in blobs[r]]
+        out.append((s[0], base64.b64encode(min(found)).decode() if found else None))
+    return out
+
+
+# ---------------------------------------------------------------------------
 # context assembly + answer
 # ---------------------------------------------------------------------------
 
-def _csv_section(df: DataFrame, cols: list[str], title: str) -> str:
+def _csv_section(rows: list, schema: T.StructType, cols: list[str], title: str) -> str:
     """P12: list-of-list -> ',\\t'-joined CSV text (base.py:259-265)."""
-    rows = df.select(*cols).collect()
+    at = [schema.names.index(c) for c in cols]
     lines = [",\t".join(cols)]
     for i, r in enumerate(rows):
-        lines.append(",\t".join([str(i)] + [str(r[c]) for c in cols]))
+        lines.append(",\t".join([str(i)] + [str(r[j]) for j in at]))
     return f"-----{title}-----\n" + "\n".join(lines)
 
 
-def assemble_context(seeds, text_units, edge_rows) -> str:
-    """query.py:264-311: three sections — entities, relationships, sources."""
+def assemble_context(seeds: list, text_units: list, edge_rows: list) -> str:
+    """query.py:264-311: three sections — entities, relationships, sources —
+    from rows laid out as SEEDS, TEXT_UNITS and RANKED_EDGES."""
     return "\n".join(
         [
-            _csv_section(seeds, ["entity_name", "entity_type", "description", "degree"], "Entities"),
-            _csv_section(edge_rows, ["src", "tgt", "description", "weight", "edge_rank"], "Relationships"),
-            _csv_section(text_units, ["content", "order", "relation_counts"], "Sources"),
+            _csv_section(seeds, SEEDS, ["entity_name", "entity_type", "description", "degree"], "Entities"),
+            _csv_section(edge_rows, RANKED_EDGES, RANKED_EDGES.names, "Relationships"),
+            _csv_section(text_units, TEXT_UNITS, ["content", "order", "relation_counts"], "Sources"),
         ]
     )
 
@@ -445,40 +586,6 @@ def log_query(spark: SparkSession, log_dir: str, question: str, context: str,
     ).withColumn("ts", F.current_timestamp()).write.mode("append").parquet(log_dir)
 
 
-def _mm_image_payloads(
-    seeds: DataFrame, media: DataFrame | None, limit: int = 3
-) -> list[tuple[str, str | None]]:
-    """W7 + the reference's base64 image hand-off (query.py:434-436): the
-    ranked ORI_IMG seeds joined to the media table by their non-chunk
-    source_ids -> [(entity_name, image_b64 | None)]. The join side is <=
-    ``limit`` entities -> broadcast against the media scan."""
-    import base64
-
-    base = multimodal_entities(seeds, limit=limit).select(
-        "entity_name", "rnk", "source_ids"
-    ).localCheckpoint()  # <= limit rows; reused by both branches below
-    if media is None:
-        return [(r.entity_name, None) for r in base.orderBy("rnk").collect()]
-    refs = base.select(
-        "entity_name", F.explode("source_ids").alias("media_ref")
-    ).filter(~F.col("media_ref").startswith("chunk-"))
-    joined = (
-        F.broadcast(refs)
-        .join(media.select("media_ref", "content"), "media_ref")
-        .groupBy("entity_name")
-        .agg(F.min("content").alias("content"))
-    )
-    by_name = {
-        r.entity_name: bytes(r.content) for r in joined.collect() if r.content is not None
-    }
-    return [
-        (r.entity_name,
-         base64.b64encode(by_name[r.entity_name]).decode()
-         if r.entity_name in by_name else None)
-        for r in base.orderBy("rnk").collect()
-    ]
-
-
 def local_query(
     spark: SparkSession,
     kg: dict,
@@ -505,7 +612,9 @@ def local_query(
     ``media`` is an
     optional (media_ref, content binary) table; when given, ranked ORI_IMG
     seeds carry their base64 image bytes into the multimodal answer branch.
-    Returns {"seeds", "text_units", "edges", "context", "answer"}."""
+    Returns {"seeds", "text_units", "edges", "context", "answer",
+    "mm_entities"}; the first three are DataFrames over the question's
+    bounded rows (see the module docstring)."""
     from mmgraphrag_spark.backends.embeddings import HashEmbedBackend
 
     entities, edges, chunks = kg["entities"], kg["edges"], kg["chunks"]
@@ -523,24 +632,43 @@ def local_query(
             vdb, qv, top_k=top_k, threshold=threshold, mode=ann_mode,
             ann_index=ann_index,
         )
-    ann = ann.localCheckpoint()
-    # degrees are a full edge scan + shuffle consumed by BOTH the seed
-    # rehydration and the edge ranking — compute once per query
-    degrees = node_degrees(edges).localCheckpoint()
-    seeds = seed_entities(entities, edges, ann, degrees=degrees).localCheckpoint()
+    ann_rows = sorted(ann.collect(), key=lambda r: r["rnk"])
+    hits = {r["entity_name"] for r in ann_rows}
+    # edges touching the hits; their far ends hold every 1-hop neighbour
+    hit_edges = _lookup(edges, hits, ("src", "tgt"), ("src", "tgt", "weight", "description"))
+    ents = defaultdict(list)  # J10 rehydrate: hits and candidate neighbours
+    near = hits.union(*((s, t) for s, t, _, _ in hit_edges))
+    for e in _lookup(entities, near, ("entity_name",),
+                     ("entity_name", "entity_type", "description", "source_ids")):
+        ents[e[0]].append(e)
+    seed_names = hits & ents.keys()
+    seed_edges = [e for e in hit_edges if e[0] in seed_names or e[1] in seed_names]
+    # J11: (seed, neighbor) over both edge directions
+    pairs = {(s, t) for s, t, _, _ in seed_edges if s in seed_names} | {
+        (t, s) for s, t, _, _ in seed_edges if t in seed_names
+    }
+    # A6: exact degrees of the seeds and neighbours — every endpoint of a
+    # seed edge — from the edges touching them
+    nodes = seed_names | {n for _, n in pairs}
+    degree = Counter(x for st in _lookup(edges, nodes, ("src", "tgt"), ("src", "tgt")) for x in st)
+    seeds = [
+        (*e, r["sim"], r["rnk"], degree[e[0]])
+        for r in ann_rows
+        for e in ents.get(r["entity_name"], ())
+    ]
     # J13: the media_spans table (J2 chunk association) rewrites image refs
     # in one-hop provenance to their associated chunks
-    text_units = related_text_units(
-        seeds, entities, edges, chunks, media=kg.get("media_spans")
+    text_units = _rank_text_units(
+        seeds, pairs, ents, chunks, kg.get("media_spans"), TEXT_UNIT_BUDGET
     )
-    edge_rows = related_edges(seeds, edges, degrees=degrees)
-    context = assemble_context(seeds.orderBy("rnk"), text_units, edge_rows)
+    edge_rows = _rank_edges(seed_edges, degree, EDGE_BUDGET)
+    context = assemble_context(seeds, text_units, edge_rows)
     backend = answerer or TemplateAnswerer()
     answer = backend.answer(question, context)
     # multimodal branch (query.py:402-468): if ORI_IMG entities ranked, answer
     # per image (<=3, W7) with the image bytes attached when a media table is
     # available (query.py:434-436 sends base64 content) and merge (L12/L13)
-    payloads = _mm_image_payloads(seeds, media)
+    payloads = _image_payloads(seeds, media)
     mm = [name for name, _ in payloads]
     if mm:
         # third-party answerers written to the pre-round-3 3-arg protocol
@@ -561,9 +689,9 @@ def local_query(
     if log_dir:
         log_query(spark, log_dir, question, context, answer)
     return {
-        "seeds": seeds,
-        "text_units": text_units,
-        "edges": edge_rows,
+        "seeds": spark.createDataFrame(seeds, SEEDS),
+        "text_units": spark.createDataFrame(text_units, TEXT_UNITS),
+        "edges": spark.createDataFrame(edge_rows, RANKED_EDGES),
         "context": context,
         "answer": answer,
         "mm_entities": mm,

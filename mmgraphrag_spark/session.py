@@ -10,6 +10,13 @@ import os
 
 from pyspark.sql import SparkSession
 
+
+def default_cpus() -> int:
+    """Local-mode cores: ``SPARK_GRAFT_CPUS`` when set, else every CPU of
+    the host."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+
+
 def build_session(
     app_name: str = "mmgraphrag_spark",
     cpus: int | None = None,
@@ -24,7 +31,7 @@ def build_session(
     extractor/scene/fusion UDFs are all pandas/Arrow-batched (no per-row Python).
     """
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = default_cpus()
     if shuffle_partitions is None:
         shuffle_partitions = max(cpus, 8)
     builder = (

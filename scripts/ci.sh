@@ -32,7 +32,7 @@ if [[ "${1:-}" != "--quick" ]]; then
   python scripts/check_oracles.py /root/testdata/sf0.1
 
   echo "== bench smoke @ sf0.1 =="
-  SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 python bench.py
+  SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 python bench.py
 fi
 
 echo "CI OK"

@@ -10,7 +10,8 @@ from mmgraphrag_spark.session import build_session
 
 @pytest.fixture(scope="session")
 def spark():
-    s = build_session("mmgraphrag_spark_tests", cpus=8, shuffle_partitions=8)
+    # cores from SPARK_GRAFT_CPUS, else the host's CPU count
+    s = build_session("mmgraphrag_spark_tests", shuffle_partitions=8)
     yield s
     s.stop()
 

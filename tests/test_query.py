@@ -2,6 +2,10 @@
 
 from __future__ import annotations
 
+from types import SimpleNamespace
+
+import pytest
+
 from mmgraphrag_spark import query as Q
 
 
@@ -309,3 +313,166 @@ def test_j13_media_rewrite_in_text_unit_scoring(spark):
     without = Q.related_text_units(seeds, entities, edges, chunks).collect()
     # no rewrite: only B's literal chunk-1 citation counts
     assert without[0].relation_counts == 1
+
+
+# ---------------------------------------------------------------------------
+# local_query against the distributed operator chain
+# ---------------------------------------------------------------------------
+
+def reference_query(spark, kg, question, *, vdb=None, ann_mode="exact",
+                    ann_index=None, media=None, threshold=0.2,
+                    text_budget=Q.TEXT_UNIT_BUDGET, edge_budget=Q.EDGE_BUDGET):
+    """(context, answer, mm_entities) of ``question`` computed with the
+    whole-table operators: seed_entities -> related_text_units /
+    related_edges, the multimodal gate and a media join, all as Spark
+    plans."""
+    import base64
+
+    from pyspark.sql import functions as F
+
+    entities, edges, chunks = kg["entities"], kg["edges"], kg["chunks"]
+    qv = Q.hash_embed_text(question)
+    if vdb is None and ann_index is None:
+        vdb = Q.build_entity_vdb(entities)
+    if ann_mode == "exact":
+        ann = Q.ann_entities(vdb, qv, threshold=threshold)
+    else:
+        ann = Q.ann_entities_approx(vdb, qv, threshold=threshold, mode=ann_mode,
+                                    ann_index=ann_index)
+    degrees = Q.node_degrees(edges)
+    seeds = Q.seed_entities(entities, edges, ann.localCheckpoint(), degrees=degrees)
+    seeds = seeds.localCheckpoint()
+    text_units = Q.related_text_units(seeds, entities, edges, chunks, text_budget,
+                                      media=kg.get("media_spans"))
+    edge_rows = Q.related_edges(seeds, edges, edge_budget, degrees=degrees)
+
+    def rows(df, schema):
+        return df.select(*schema.names).collect()
+
+    context = Q.assemble_context(
+        rows(seeds.orderBy("rnk"), Q.SEEDS), rows(text_units, Q.TEXT_UNITS),
+        rows(edge_rows, Q.RANKED_EDGES),
+    )
+    backend = Q.TemplateAnswerer()
+    answer = backend.answer(question, context)
+    imgs = Q.multimodal_entities(seeds).collect()
+    b64 = {}
+    if media is not None and imgs:
+        refs = spark.createDataFrame(
+            [(r.entity_name, c) for r in imgs for c in r.source_ids
+             if not c.startswith("chunk-")],
+            "entity_name string, media_ref string",
+        )
+        for r in (refs.join(media, "media_ref").groupBy("entity_name")
+                  .agg(F.min("content").alias("content")).collect()):
+            b64[r.entity_name] = base64.b64encode(bytes(r.content)).decode()
+    mm = [r.entity_name for r in imgs]
+    if mm:
+        answer = backend.merge(question, [answer] + [
+            backend.answer_image(question, n, context, image_b64=b64.get(n))
+            for n in mm
+        ])
+    return context, answer, mm
+
+
+@pytest.fixture(scope="module")
+def query_kit(spark, pipeline_out):
+    """A VDB, an ORI_IMG question with a one-image media table, and a
+    prebuilt IVF index over the test KG."""
+    from pyspark.sql import functions as F
+
+    from mmgraphrag_spark.operators.similarity import build_ivf_index
+
+    vdb = Q.build_entity_vdb(pipeline_out["entities"]).localCheckpoint()
+    img = pipeline_out["entities"].filter(F.col("entity_type") == '"ORI_IMG"').first()
+    ref = next(s for s in img.source_ids if not s.startswith("chunk-"))
+    media = spark.createDataFrame([(ref, bytearray(b"JPEGBYTES"))], ["media_ref", "content"])
+    return SimpleNamespace(
+        kg=pipeline_out, vdb=vdb, media=media,
+        img_question=f"what does {img.entity_name} show?",
+        index=build_ivf_index(Q.vdb_as_corpus(vdb), n_centroids=4),
+    )
+
+
+# case -> kit -> (kg, question, local_query keywords); ``budgets`` swaps the
+# module's token budgets for both paths
+EQUIVALENCE_CASES = {
+    "normal": lambda k: (k.kg, "What is ENTITY_1 related to?", {"vdb": k.vdb}),
+    "hub": lambda k: (k.kg, "What is ENTITY_0 related to?", {"vdb": k.vdb}),
+    "image_with_media": lambda k: (
+        k.kg, k.img_question, {"vdb": k.vdb, "threshold": 0.0, "media": k.media}),
+    "no_seed_above_threshold": lambda k: (
+        k.kg, "What is ENTITY_1 related to?", {"vdb": k.vdb, "threshold": 2.0}),
+    "kg_without_media_spans": lambda k: (
+        {n: df for n, df in k.kg.items() if n != "media_spans"}, k.img_question,
+        {"vdb": k.vdb, "threshold": 0.0}),
+    "ivf_prebuilt_index": lambda k: (
+        k.kg, "What is ENTITY_1 related to?",
+        {"threshold": 0.0, "ann_mode": "ivf", "ann_index": k.index}),
+    "tight_budgets": lambda k: (
+        k.kg, "What is ENTITY_0 related to?", {"vdb": k.vdb, "budgets": (60, 40)}),
+}
+
+
+@pytest.mark.parametrize("case", sorted(EQUIVALENCE_CASES))
+def test_local_query_matches_operator_chain(spark, query_kit, monkeypatch, case):
+    """The bounded-lookup local_query gives the byte-identical context,
+    answer and multimodal entities of the whole-table operator chain."""
+    kg, question, kw = EQUIVALENCE_CASES[case](query_kit)
+    ref_kw = {n: v for n, v in kw.items() if n != "budgets"}
+    if "budgets" in kw:
+        text_budget, edge_budget = kw.pop("budgets")
+        monkeypatch.setattr(Q, "TEXT_UNIT_BUDGET", text_budget)
+        monkeypatch.setattr(Q, "EDGE_BUDGET", edge_budget)
+        ref_kw.update(text_budget=text_budget, edge_budget=edge_budget)
+    out = Q.local_query(spark, kg, question, **kw)
+    context, answer, mm = reference_query(spark, kg, question, **ref_kw)
+    assert out["context"] == context
+    assert out["answer"] == answer
+    assert out["mm_entities"] == mm
+    if case == "no_seed_above_threshold":
+        assert context.count("\n") == 5  # three titles, three header rows
+        assert out["seeds"].count() == 0
+    if case == "image_with_media":
+        assert "+bytes" in answer
+    if case == "tight_budgets":
+        full = reference_query(spark, kg, question, **ref_kw | {
+            "text_budget": Q.TEXT_UNIT_BUDGET * 100, "edge_budget": Q.EDGE_BUDGET * 100})
+        assert len(context) < len(full[0])  # the budgets did cut
+
+
+def test_local_query_job_budget_and_no_retained_blocks(spark, pipeline_out, tmp_path):
+    """A logged exact-mode question runs <= 8 Spark jobs (the ANN scan, the
+    key-set lookups and the log append), and five questions leave no cached
+    block behind. Both counts come from the status store, which runs no
+    job."""
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    vdb = Q.build_entity_vdb(pipeline_out["entities"]).localCheckpoint()
+    log_dir = str(tmp_path / "qlog")
+
+    def ask(question):
+        return Q.local_query(spark, pipeline_out, question, vdb=vdb, log_dir=log_dir)
+
+    def cached():
+        """RDD id -> cached blocks, over the RDDs holding any."""
+        return {r.id(): r.numCachedPartitions() for r in jsc.getRDDStorageInfo()
+                if r.numCachedPartitions()}
+
+    ask("What is ENTITY_2 related to?")  # the log directory exists from here on
+    before = cached()
+    sc.setJobGroup("one-question", "local_query job budget")
+    try:
+        ask("What is ENTITY_1 related to?")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jsc.listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup("one-question")
+    assert 0 < len(jobs) <= 8, jobs
+    for k in range(5):
+        ask(f"What is ENTITY_{k} related to?")
+    # the session is shared: earlier tests' RDDs may be cleaned meanwhile,
+    # but no RDD may gain a block
+    after = cached()
+    assert all(after[i] == before.get(i) for i in after), (before, after)

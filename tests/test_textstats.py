@@ -322,6 +322,28 @@ def test_stratified_sample_broadcast_fallback(spark):
     assert {r.doc_id for r in kept} == {i for i in range(5000) if i % 2}
 
 
+def test_stratified_sample_fallback_keeps_user_columns_and_key_type(spark):
+    """The >max_case_strata lookup path: an input column named like the
+    helper column passes through untouched, and an integer stratum column
+    joins on its own type — the same rows as the CASE path."""
+    from mmgraphrag_spark.operators.sampling import stratified_sample
+
+    df = spark.range(0, 4000).select(
+        F.col("id").alias("doc_id"),
+        (F.col("id") % 100).cast("int").alias("bucket"),
+        F.concat(F.lit("user-"), F.col("id")).alias("_thr"),
+    )
+    rates = {k: (256 if k % 3 else 13) for k in range(100)}  # 100 strata > 64
+    case_path = stratified_sample(df, "doc_id", "bucket", rates, max_case_strata=1000)
+    join_path = stratified_sample(df, "doc_id", "bucket", rates)
+    plan = join_path._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan, plan
+    assert join_path.columns == df.columns
+    got = sorted(tuple(r) for r in join_path.collect())
+    assert got == sorted(tuple(r) for r in case_path.collect())
+    assert 2000 < len(got) < 4000  # keep-all strata kept, the 13/256 ones cut
+
+
 def test_fasttext_langid_backend_gated():
     """The production langid seam mirrors the YOLO/sentence-transformers
     gating: absent library -> NotImplementedError with the recipe; the
