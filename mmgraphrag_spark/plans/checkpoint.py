@@ -94,13 +94,16 @@ class _HadoopFS:
         finally:
             stream.close()
 
-    def write_text_atomic(self, path: str, text: str) -> None:
-        """Write to <path>.tmp then rename over <path> (the same
-        visible-only-after-success protocol the local os.replace gave)."""
-        tmp = self._Path(path + ".tmp")
+    def write_atomic(self, path: str, data: bytes) -> None:
+        """Write to a hidden ``_tmp-<name>`` sibling, then rename it over
+        <path>: the file is visible only after a complete write, and Spark's
+        reader skips ``_``-prefixed names, so a crash mid-write leaves
+        nothing readable in a table directory."""
+        head, name = os.path.split(path)
+        tmp = self._Path(os.path.join(head, "_tmp-" + name))
         out = self._fs.create(tmp, True)
         try:
-            out.write(bytearray(text.encode("utf-8")))
+            out.write(bytearray(data))
         finally:
             out.close()
         dst = self._Path(path)
@@ -213,7 +216,7 @@ class ParquetCheckpointer:
             "wall_seconds": round(time.monotonic() - t0, 3),
             "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         }
-        self._fs.write_text_atomic(self._marker(name), json.dumps(marker))
+        self._fs.write_atomic(self._marker(name), json.dumps(marker).encode())
         return out
 
     def stage_light(self, name: str, df: DataFrame) -> DataFrame:

@@ -20,10 +20,12 @@ endpoints of the edges touching those (their exact degrees, counted on the
 driver), the media_spans rows of the neighbours' media refs, the seeds'
 chunks — and ranks and cuts those bounded rows in plain Python. A question
 costs the same on a KG of any size with the same seed neighbourhoods, and
-holds no Spark state after it returns. The distributed operators below
-(node_degrees, seed_entities, one_hop_neighbors, related_text_units,
-related_edges) state the same rules as whole-table plans; the oracle queries
-and the local_query equivalence tests run them.
+holds no Spark state after it returns. The query log (``log_dir``) gets one
+driver-written parquet part per question, through the Hadoop FS, with no
+Spark job. The distributed operators below (node_degrees, seed_entities,
+one_hop_neighbors, related_text_units, related_edges) state the same rules
+as whole-table plans; the oracle queries and the local_query equivalence
+tests run them.
 """
 
 from __future__ import annotations
@@ -31,12 +33,17 @@ from __future__ import annotations
 import base64
 import hashlib
 import json
+import os
 import re
+import uuid
 from collections import Counter, defaultdict
+from datetime import datetime, timezone
 from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -105,8 +112,6 @@ def load_or_build_query_state(
     scan, embed, or quantizer refit at query time at all. Otherwise build
     the VDB once (localCheckpoint'ed for reuse across questions) and, for
     ivf, fit the index from it."""
-    import os
-
     from mmgraphrag_spark.plans import fs_exists
 
     idx_dir = os.path.join(base_dir, "ann_index")
@@ -579,11 +584,26 @@ def multimodal_entities(seeds: DataFrame, limit: int = 3) -> DataFrame:
 
 def log_query(spark: SparkSession, log_dir: str, question: str, context: str,
               answer: str) -> None:
-    """S9 (query.py:395-397): append-mode query log — parquet table instead of
-    the reference's context.csv."""
-    spark.createDataFrame(
-        [(question, context, answer)], ["question", "context", "answer"]
-    ).withColumn("ts", F.current_timestamp()).write.mode("append").parquet(log_dir)
+    """S9 (query.py:395-397): append-mode query log — a parquet table of
+    (question, context, answer, ts) instead of the reference's context.csv.
+
+    Each call adds one snappy part file holding one row, serialized on the
+    driver with pyarrow and written through the Hadoop FS (so hdfs:// and
+    s3a:// log directories work) — no Spark job. ``ts`` is a UTC timestamp,
+    which Spark reads as ``timestamp``, so ``spark.read.parquet(log_dir)``
+    reads these parts and parts from a Spark ``write.mode("append")`` alike."""
+    from mmgraphrag_spark.plans.checkpoint import _HadoopFS
+
+    row = pa.table({
+        "question": pa.array([question], pa.string()),
+        "context": pa.array([context], pa.string()),
+        "answer": pa.array([answer], pa.string()),
+        "ts": pa.array([datetime.now(timezone.utc)], pa.timestamp("us", tz="UTC")),
+    })
+    buf = pa.BufferOutputStream()
+    pq.write_table(row, buf, compression="snappy")
+    path = os.path.join(log_dir, f"part-{uuid.uuid4()}.snappy.parquet")
+    _HadoopFS(spark, log_dir).write_atomic(path, buf.getvalue().to_pybytes())
 
 
 def local_query(

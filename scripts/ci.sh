@@ -1,11 +1,12 @@
 #!/usr/bin/env bash
 # One-command verification: unit/property/e2e suite, driver-contract oracle
-# parity at two scales, and a bench smoke. Mirrors what the round driver
-# checks (CORRECTNESS_r{N} + BENCH_r{N}) plus the full pytest gate.
+# parity at two scales, a bench smoke and a perfbench correctness smoke.
+# Mirrors what the round driver checks (CORRECTNESS_r{N} + BENCH_r{N}) plus
+# the full pytest gate.
 #
 # Usage: bash scripts/ci.sh [--quick]
-#   --quick: skip the sf0.1 oracle pass and the bench smoke (~7 min total
-#            instead of ~20).
+#   --quick: skip the sf0.1 oracle pass and both smokes (~7 min total
+#            instead of ~25).
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -33,6 +34,20 @@ if [[ "${1:-}" != "--quick" ]]; then
 
   echo "== bench smoke @ sf0.1 =="
   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 python bench.py
+
+  echo "== perfbench correctness smoke =="
+  # each run's last stdout line is its result JSON; it must be correct with
+  # no failed operation (query_service checks every question's seeds against
+  # a numpy top-k, kg_small the triples against DuckDB)
+  for args in "--workload query_service --seed 1 --trace 0" \
+              "--workload kg_small --seed 1 --trace 1"; do
+    python3 perfbench/run.py $args | tail -n 1 | python3 -c '
+import json, sys
+res = json.loads(sys.stdin.read())
+ok = res.get("correct") is True and res.get("failed") == 0
+print(("ok: " if ok else "FAILED: ") + sys.argv[1], {k: res.get(k) for k in ("correct", "attempted", "failed")})
+sys.exit(0 if ok else 1)' "$args"
+  done
 fi
 
 echo "CI OK"
