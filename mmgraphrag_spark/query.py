@@ -10,22 +10,32 @@ Embedding backend is the M1 seam: a vectorized pandas UDF. Offline mode uses
 deterministic feature hashing (token -> signed bucket) of the same shape a
 sentence-transformer backend would produce; swap ``embed_fn`` for a real model.
 
-Scale notes: the entity VDB is an embeddings table; ANN is the (single) query
-vector against it — one scan, ranked as a per-partition top-k. Everything
-after it reads only the seeds' neighbourhood, as the reference reads only the
-seeds' nodes and edges from graph storage: ``local_query`` runs a few key-set
-lookups (filtered scans, one Spark job each, no shuffle) — the edges touching
-the seeds, the entity rows of the seeds and their 1-hop neighbours, the
-endpoints of the edges touching those (their exact degrees, counted on the
-driver), the media_spans rows of the neighbours' media refs, the seeds'
-chunks — and ranks and cuts those bounded rows in plain Python. A question
-costs the same on a KG of any size with the same seed neighbourhoods, and
-holds no Spark state after it returns. The query log (``log_dir``) gets one
-driver-written parquet part per question, through the Hadoop FS, with no
-Spark job. The distributed operators below (node_degrees, seed_entities,
-one_hop_neighbors, related_text_units, related_edges) state the same rules
-as whole-table plans; the oracle queries and the local_query equivalence
-tests run them.
+Scale notes: the reference answers a local query from memory (a numpy VDB,
+a NetworkX graph), and so does ``local_query`` on a bounded KG. Each KG table
+it reads (entities, edges, chunks, media_spans) and the caller's VDB is
+collected to the driver by its first lookup (one Spark job), then held in a
+driver-resident index: the rows, with a key -> row positions dict per key
+column, and the VDB as a float64 matrix with its norms. The index is cached
+per DataFrame object, weakly, so a re-index (which makes new DataFrames)
+never reads a stale one, and an index is freed with its DataFrames. From
+there a question runs no Spark job: the exact ANN is folded on the driver
+with ``cosine_similarity_col``'s arithmetic and tie order, and the lookups
+read the seeds' neighbourhood from the dicts — the edges touching the seeds,
+the entity rows of the seeds and their 1-hop neighbours, the endpoints of
+the edges touching those (their exact degrees, counted on the driver), the
+media_spans rows of the neighbours' media refs, the seeds' chunks. Plain
+Python then ranks and cuts those bounded rows. The budget is INDEX_ROWS rows
+per DataFrame (measured driver RSS per row beside it). A table over budget
+keeps one filtered scan per lookup (one Spark job, no shuffle), and a VDB
+over budget, or one the driver fold cannot reproduce bit for bit, keeps
+``ann_entities``' distributed top-k: ~7 jobs a question. The ``media`` image
+bytes are always read by a filtered scan, since a row budget does not bound
+them. The query log (``log_dir``) gets one driver-written parquet part per
+question, through the Hadoop FS, with no Spark job. The distributed
+operators below (node_degrees, seed_entities, one_hop_neighbors,
+related_text_units, related_edges) are not the serving path: they state the
+same rules as whole-table plans, for the oracle queries and the local_query
+equivalence tests.
 """
 
 from __future__ import annotations
@@ -36,6 +46,7 @@ import json
 import os
 import re
 import uuid
+import weakref
 from collections import Counter, defaultdict
 from datetime import datetime, timezone
 from typing import Iterator
@@ -424,7 +435,48 @@ RANKED_EDGES = _struct(src=_S, tgt=_S, description=_S, weight=T.DoubleType(),
 _WS = re.compile(r"\s+", re.ASCII)
 
 
-def _lookup(df: DataFrame, keys, key_cols: tuple, cols: tuple) -> list:
+# Row budget of the driver-resident index, per DataFrame (KG table or VDB).
+# Driver RSS per indexed row, measured on the query-service KG (2,581
+# entities, 4,526 edges, 2,358 chunks, 600 media_spans rows): 0.8-1.2 KB for
+# a KG-table row and 3.7 KB for a 64-dim VDB row (its collected Rows, before
+# the matrix replaces them). At the budget that is ~60 MB per table and
+# ~185 MB for a VDB; the bench KG's largest table uses 9% of it.
+INDEX_ROWS = 50_000
+
+# DataFrame -> its _Index (a VDB -> (names, matrix, norms)), or None when the
+# DataFrame is served by Spark: over budget, or a VDB the driver fold cannot
+# reproduce. Weak keys: a re-index makes new DataFrames, and an entry goes
+# when its DataFrame does.
+_TABLES: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_VDBS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _rows_within_budget(df: DataFrame) -> list | None:
+    """Every row of ``df`` on the driver (one Spark job), or None when it
+    has more than INDEX_ROWS."""
+    rows = df.limit(INDEX_ROWS + 1).collect()
+    return rows if len(rows) <= INDEX_ROWS else None
+
+
+class _Index:
+    """The rows of one DataFrame held on the driver, with a key -> row
+    positions dict per key column, each built the first time it is asked
+    for."""
+
+    def __init__(self, columns: list[str], rows: list):
+        self.columns, self.rows, self._by = columns, rows, {}
+
+    def positions(self, col: str) -> dict:
+        by = self._by.get(col)
+        if by is None:
+            by, j = defaultdict(list), self.columns.index(col)
+            for i, r in enumerate(self.rows):
+                by[r[j]].append(i)
+            self._by[col] = by
+        return by
+
+
+def _scan(df: DataFrame, keys, key_cols: tuple, cols: tuple) -> list:
     """``cols`` of the rows of ``df`` whose value in any of ``key_cols`` is
     in ``keys``: one filtered scan (one Spark job, no shuffle), none at all
     for an empty key set. The keys travel as ONE JSON literal that constant
@@ -437,6 +489,78 @@ def _lookup(df: DataFrame, keys, key_cols: tuple, cols: tuple) -> list:
     for c in key_cols[1:]:
         hit = hit | F.array_contains(wanted, F.col(c))
     return df.filter(hit).select(*cols).collect()
+
+
+def _lookup(df: DataFrame, keys, key_cols: tuple, cols: tuple) -> list:
+    """``_scan``'s rows, in its order and multiplicity, served from the
+    driver-resident index of ``df``: its first lookup collects the
+    DataFrame once (one Spark job); later ones run none. A DataFrame over
+    INDEX_ROWS keeps the filtered scan."""
+    if not keys:
+        return []
+    if df not in _TABLES:
+        rows = _rows_within_budget(df)
+        _TABLES[df] = None if rows is None else _Index(df.columns, rows)
+    index = _TABLES[df]
+    if index is None:
+        return _scan(df, keys, key_cols, cols)
+    hits = set()  # row positions: an edge matching at both ends comes once
+    for c in key_cols:
+        by = index.positions(c)
+        for k in keys:
+            hits.update(by.get(k, ()))
+    at = [index.columns.index(c) for c in cols]
+    return [tuple(index.rows[i][j] for j in at) for i in sorted(hits)]
+
+
+def _fold(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """Row-wise dot product accumulated left to right over the columns, as
+    ``cosine_similarity_col``'s ``aggregate`` sums (a matmul sums in another
+    order, and its last bits differ)."""
+    acc = np.zeros(a.shape[0])
+    for j in range(a.shape[1]):
+        acc = acc + a[:, j] * b[:, j]
+    return acc
+
+
+def _held_vdb(vdb: DataFrame) -> tuple | None:
+    """(names, matrix, norms) of the VDB, collected once; None when it is
+    over budget or holds what Spark ranks differently: a null name or
+    vector, vectors of different lengths (zip_with pads with nulls) or a
+    non-finite component (Spark sorts NaN above every number)."""
+    if vdb not in _VDBS:
+        rows = _rows_within_budget(vdb)
+        held = None
+        if rows:
+            names = [r["entity_name"] for r in rows]
+            vecs = [r["vec"] for r in rows]
+            if None not in names and all(v is not None for v in vecs) \
+                    and len({len(v) for v in vecs}) == 1:
+                m = np.asfortranarray(np.array(vecs, dtype=np.float64))
+                if np.isfinite(m).all():
+                    held = (names, m, np.sqrt(_fold(m, m)))
+        _VDBS[vdb] = held
+    return _VDBS[vdb]
+
+
+def _ann_rows(vdb: DataFrame, query_vec, top_k: int, threshold: float) -> list:
+    """``ann_entities``' rows (entity_name, sim, rnk) in rank order, computed
+    on the driver from the VDB's index with the same arithmetic: the dot
+    product and both norms folded left to right, then ``dot / (norm * qnorm
+    + 1e-12)``; sim >= threshold, ordered (sim desc, entity_name asc), top_k
+    numbered from 1. When the driver cannot reproduce that bit for bit (see
+    ``_held_vdb``; a query of another length or with a non-finite component;
+    a sim that overflows), ``ann_entities`` runs instead."""
+    held = _held_vdb(vdb)
+    q = np.asarray(query_vec, dtype=np.float64)[None, :]
+    if held is not None and q.shape[1] == held[1].shape[1] and np.isfinite(q).all():
+        names, m, norms = held
+        with np.errstate(all="ignore"):
+            sims = _fold(m, q) / (norms * np.sqrt(_fold(q, q))[0] + 1e-12)
+        if np.isfinite(sims).all():
+            ranked = sorted((-s, n) for s, n in zip(sims.tolist(), names) if s >= threshold)
+            return [(n, -s, rnk) for rnk, (s, n) in enumerate(ranked[:top_k], 1)]
+    return sorted(ann_entities(vdb, query_vec, top_k, threshold).collect(), key=lambda r: r["rnk"])
 
 
 def _within_budget(rows: list, tokens: list, budget: int) -> list:
@@ -517,7 +641,8 @@ def _image_payloads(
         )
     blobs = defaultdict(list)
     wanted = set().union(*refs.values())
-    for ref, blob in _lookup(media, wanted, ("media_ref",), ("media_ref", "content")):
+    # image bytes: a row budget does not bound them, so no driver index
+    for ref, blob in _scan(media, wanted, ("media_ref",), ("media_ref", "content")):
         if blob is not None:
             blobs[ref].append(bytes(blob))
     out = []
@@ -624,17 +749,20 @@ def local_query(
 
     ``embed_backend`` (backends/embeddings.py) embeds BOTH the VDB and the
     question — they must share a space for the cosine ranking to mean
-    anything. ``ann_mode`` picks the VDB ranking plan: "exact" (distributed
-    top-k full scan — the correctness baseline), "lsh" or "ivf" (bucketed
-    approximate scans for VDBs too large to scan per query; pass
-    ``ann_index`` from similarity.build_ivf_index to reuse one fitted
-    quantizer across calls — refitting per question defeats the purpose).
-    ``media`` is an
-    optional (media_ref, content binary) table; when given, ranked ORI_IMG
-    seeds carry their base64 image bytes into the multimodal answer branch.
-    Returns {"seeds", "text_units", "edges", "context", "answer",
-    "mm_entities"}; the first three are DataFrames over the question's
-    bounded rows (see the module docstring)."""
+    anything. ``ann_mode`` picks the VDB ranking: "exact" (the full cosine
+    top-k — the correctness baseline; folded on the driver from the
+    index of the passed ``vdb``, else ``ann_entities``' distributed scan),
+    "lsh" or "ivf" (bucketed approximate scans for VDBs too large to scan
+    per query; pass ``ann_index`` from similarity.build_ivf_index to reuse
+    one fitted quantizer across calls — refitting per question defeats the
+    purpose). Pass the same ``kg`` DataFrames and ``vdb`` to every question:
+    the first question on them builds the driver-resident index (see the
+    module docstring), and each later one runs no Spark job while the KG
+    is within INDEX_ROWS. ``media`` is an optional (media_ref, content
+    binary) table; when given, ranked ORI_IMG seeds carry their base64
+    image bytes into the multimodal answer branch. Returns {"seeds",
+    "text_units", "edges", "context", "answer", "mm_entities"}; the first
+    three are DataFrames over the question's bounded rows."""
     from mmgraphrag_spark.backends.embeddings import HashEmbedBackend
 
     entities, edges, chunks = kg["entities"], kg["edges"], kg["chunks"]
@@ -642,18 +770,22 @@ def local_query(
     # a prebuilt IVF index already holds every corpus vector — building (and
     # eagerly materializing) the VDB per query would re-scan + re-embed the
     # entities table for nothing, defeating index-once-query-many
-    if vdb is None and not (ann_mode == "ivf" and ann_index is not None):
+    per_call_vdb = vdb is None and not (ann_mode == "ivf" and ann_index is not None)
+    if per_call_vdb:
         vdb = build_entity_vdb(entities, backend=embed_backend).localCheckpoint()
     qv = embed_backend.embed([question])[0]
-    if ann_mode == "exact":
-        ann = ann_entities(vdb, qv, top_k=top_k, threshold=threshold)
+    if ann_mode == "exact" and not per_call_vdb:
+        ann_rows = _ann_rows(vdb, qv, top_k, threshold)
     else:
-        ann = ann_entities_approx(
-            vdb, qv, top_k=top_k, threshold=threshold, mode=ann_mode,
-            ann_index=ann_index,
-        )
-    ann_rows = sorted(ann.collect(), key=lambda r: r["rnk"])
-    hits = {r["entity_name"] for r in ann_rows}
+        if ann_mode == "exact":  # indexing a VDB made for one question gains nothing
+            ann = ann_entities(vdb, qv, top_k=top_k, threshold=threshold)
+        else:
+            ann = ann_entities_approx(
+                vdb, qv, top_k=top_k, threshold=threshold, mode=ann_mode,
+                ann_index=ann_index,
+            )
+        ann_rows = sorted(ann.collect(), key=lambda r: r["rnk"])
+    hits = {r[0] for r in ann_rows}
     # edges touching the hits; their far ends hold every 1-hop neighbour
     hit_edges = _lookup(edges, hits, ("src", "tgt"), ("src", "tgt", "weight", "description"))
     ents = defaultdict(list)  # J10 rehydrate: hits and candidate neighbours
@@ -672,9 +804,9 @@ def local_query(
     nodes = seed_names | {n for _, n in pairs}
     degree = Counter(x for st in _lookup(edges, nodes, ("src", "tgt"), ("src", "tgt")) for x in st)
     seeds = [
-        (*e, r["sim"], r["rnk"], degree[e[0]])
-        for r in ann_rows
-        for e in ents.get(r["entity_name"], ())
+        (*e, sim, rnk, degree[e[0]])
+        for name, sim, rnk in ann_rows
+        for e in ents.get(name, ())
     ]
     # J13: the media_spans table (J2 chunk association) rewrites image refs
     # in one-hop provenance to their associated chunks

@@ -38,13 +38,22 @@ if [[ "${1:-}" != "--quick" ]]; then
   echo "== perfbench correctness smoke =="
   # each run's last stdout line is its result JSON; it must be correct with
   # no failed operation (query_service checks every question's seeds against
-  # a numpy top-k, kg_small the triples against DuckDB)
+  # a numpy top-k, kg_small the triples against DuckDB). The traced
+  # query_service run must also show questions served from the
+  # driver-resident index: 0 Spark jobs per question (median) and no RDD
+  # block retained over the question list.
   for args in "--workload query_service --seed 1 --trace 0" \
-              "--workload kg_small --seed 1 --trace 1"; do
+              "--workload kg_small --seed 1 --trace 1" \
+              "--workload query_service --seed 1 --trace 1"; do
     python3 perfbench/run.py $args | tail -n 1 | python3 -c '
 import json, sys
 res = json.loads(sys.stdin.read())
 ok = res.get("correct") is True and res.get("failed") == 0
+if "query_service --seed 1 --trace 1" in sys.argv[1]:
+    m = {k: v["value"] for k, v in res.get("metrics", {}).items()}
+    first, last = m.get("session.rdd_blocks.first"), m.get("session.rdd_blocks.last")
+    print("query.jobs.p50", m.get("query.jobs.p50"), "session.rdd_blocks", first, "->", last)
+    ok = ok and m.get("query.jobs.p50") == 0 and first is not None and last == first
 print(("ok: " if ok else "FAILED: ") + sys.argv[1], {k: res.get(k) for k in ("correct", "attempted", "failed")})
 sys.exit(0 if ok else 1)' "$args"
   done

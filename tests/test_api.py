@@ -89,15 +89,31 @@ def test_markdown_mode_surfaces_minerus_image_bytes(spark, tmp_path):
     assert any(r.media_ref == "images/fig1.png" for r in spans)
 
 
-def test_reindex_reflects_new_corpus_and_drops_stale_index(spark, md_corpus_dir, tmp_path):
+def test_reindex_reflects_new_corpus_and_drops_stale_index(spark, md_corpus_dir, tmp_path,
+                                                           monkeypatch):
     """Re-indexing a working_dir with a DIFFERENT corpus must not resume the
-    previous run's stage snapshots (silent wrong output) and must retire a
-    persisted ann_index built over the previous graph's vectors."""
+    previous run's stage snapshots (silent wrong output), must retire a
+    persisted ann_index built over the previous graph's vectors, and must
+    not answer from the driver-resident query index of the previous graph."""
     import shutil
 
+    from mmgraphrag_spark import query as Q
+
+    contexts = []
+    real = Q.local_query
+
+    def local_query(*args, **kwargs):
+        out = real(*args, **kwargs)
+        contexts.append(out["context"])
+        return out
+
+    monkeypatch.setattr(Q, "local_query", local_query)
     wd = str(tmp_path / "wd")
     rag = MMGraphRAGSpark(wd, spark=spark)
     rag.index(md_corpus_dir)
+    assert rag.query("What is ENTITY_2 related to?")
+    stale = contexts[-1].splitlines()[2].split(",\t")[1]  # corpus A's top seed
+    assert stale.startswith('"ENTITY_')
     # fake a persisted index from an earlier submit_job --build-ann-index
     os.makedirs(os.path.join(wd, "ann_index", "centroids"), exist_ok=True)
 
@@ -115,6 +131,10 @@ def test_reindex_reflects_new_corpus_and_drops_stale_index(spark, md_corpus_dir,
     # corpus A's graph is gone — stages were rebuilt, not resumed
     assert '"ENTITY_2"' not in names
     assert not os.path.isdir(os.path.join(wd, "ann_index"))
+    # the same instance answers from the new graph
+    assert rag.query("What is ENTITY_90 related to?")
+    assert "ENTITY_90" in contexts[-1]
+    assert stale not in contexts[-1] and "ENTITY_2" not in contexts[-1]
     shutil.rmtree(wd, ignore_errors=True)
 
 

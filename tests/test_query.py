@@ -2,7 +2,10 @@
 
 from __future__ import annotations
 
+import gc
 import os
+import uuid
+import weakref
 from types import SimpleNamespace
 
 import pytest
@@ -466,10 +469,27 @@ EQUIVALENCE_CASES = {
 }
 
 
-@pytest.mark.parametrize("case", sorted(EQUIVALENCE_CASES))
-def test_local_query_matches_operator_chain(spark, query_kit, monkeypatch, case):
-    """The bounded-lookup local_query gives the byte-identical context,
-    answer and multimodal entities of the whole-table operator chain."""
+@pytest.fixture
+def scan_path(monkeypatch):
+    """Serve every lookup and the exact ANN from Spark: a zero-row index
+    budget, and fresh caches so that no index built earlier is read."""
+    monkeypatch.setattr(Q, "INDEX_ROWS", 0)
+    monkeypatch.setattr(Q, "_TABLES", weakref.WeakKeyDictionary())
+    monkeypatch.setattr(Q, "_VDBS", weakref.WeakKeyDictionary())
+
+
+# the driver-resident index path keeps the plain case id; "-scan" forces the
+# Spark lookups and ann_entities
+@pytest.mark.parametrize("case, path", [
+    pytest.param(c, p, id=c if p == "index" else f"{c}-scan")
+    for c in sorted(EQUIVALENCE_CASES) for p in ("index", "scan")
+])
+def test_local_query_matches_operator_chain(spark, query_kit, monkeypatch, request, case, path):
+    """local_query gives the byte-identical context, answer and multimodal
+    entities of the whole-table operator chain, served from the
+    driver-resident index and from Spark lookups alike."""
+    if path == "scan":
+        request.getfixturevalue("scan_path")
     kg, question, kw = EQUIVALENCE_CASES[case](query_kit)
     ref_kw = {n: v for n, v in kw.items() if n != "budgets"}
     if "budgets" in kw:
@@ -482,6 +502,11 @@ def test_local_query_matches_operator_chain(spark, query_kit, monkeypatch, case)
     assert out["context"] == context
     assert out["answer"] == answer
     assert out["mm_entities"] == mm
+    # the path under test is the one that ran
+    if "vdb" in kw:
+        assert (Q._VDBS.get(kw["vdb"]) is None) == (path == "scan")
+    if case != "no_seed_above_threshold":
+        assert (Q._TABLES.get(kg["edges"]) is None) == (path == "scan")
     if case == "no_seed_above_threshold":
         assert context.count("\n") == 5  # three titles, three header rows
         assert out["seeds"].count() == 0
@@ -493,38 +518,120 @@ def test_local_query_matches_operator_chain(spark, query_kit, monkeypatch, case)
         assert len(context) < len(full[0])  # the budgets did cut
 
 
-def test_local_query_job_budget_and_no_retained_blocks(spark, pipeline_out, tmp_path):
-    """A logged exact-mode question runs <= 7 Spark jobs (the ANN scan and
-    the key-set lookups; the log append runs none), and five questions leave
-    no cached block behind. Both counts come from the status store, which
-    runs no job."""
+def test_driver_ann_matches_ann_entities_bit_for_bit(spark):
+    """The driver-side fold ranks a hand-made VDB exactly as ann_entities:
+    duplicate vectors under different names tie and go by name, and a sim
+    equal to the threshold is kept. A VDB with a NaN component, which Spark
+    ranks above every number, falls back to ann_entities."""
+    tie = [0.3, -1.7, 0.2, 2.9]
+    vecs = [("d", tie), ("b", tie), ("a", tie), ("c", [1.1, 0.4, -0.9, 0.05]),
+            ("e", [-2.0, 0.7, 0.1, 0.3]), ("f", [0.0, 0.0, 0.0, 0.0]),
+            ("g", [0.9, 0.1, 0.35, 1.3])]
+    schema = "entity_name string, vec array<double>"
+    vdb = spark.createDataFrame(vecs, schema)
+    qv = [0.35, -1.6, 0.2, 2.9]
+
+    def spark_rows(df, top_k, threshold):
+        return sorted(Q.ann_entities(df, qv, top_k, threshold).collect(), key=lambda r: r.rnk)
+
+    def bits(rows):
+        return [(r[0], repr(r[1]), r[2]) for r in rows]
+
+    at = next(r.sim for r in spark_rows(vdb, 10, -2.0) if r.entity_name == "c")
+    for top_k, threshold in [(10, -2.0), (2, -2.0), (10, at), (3, 0.0), (0, -2.0)]:
+        got = Q._ann_rows(vdb, qv, top_k, threshold)
+        assert bits(got) == bits(spark_rows(vdb, top_k, threshold)), (top_k, threshold)
+    assert Q._VDBS[vdb] is not None  # the driver fold served them
+    assert [r[0] for r in Q._ann_rows(vdb, qv, 2, -2.0)] == ["a", "b"]
+    assert "c" in [r[0] for r in Q._ann_rows(vdb, qv, 10, at)]
+
+    nan = spark.createDataFrame(vecs + [("h", [0.1, float("nan"), 0.2, 0.3])], schema)
+    want = spark_rows(nan, 3, 0.0)
+    assert want[0].entity_name == "h"
+    assert bits(Q._ann_rows(nan, qv, 3, 0.0)) == bits(want)
+    assert Q._VDBS[nan] is None
+
+
+def _cached(spark) -> dict:
+    """RDD id -> cached blocks, over the RDDs holding any."""
+    return {r.id(): r.numCachedPartitions()
+            for r in spark.sparkContext._jsc.sc().getRDDStorageInfo()
+            if r.numCachedPartitions()}
+
+
+def _jobs_of(spark, ask, question) -> list:
+    """The Spark job ids one question runs, read from the status store,
+    which runs no job."""
     sc = spark.sparkContext
-    jsc = sc._jsc.sc()
-    vdb = Q.build_entity_vdb(pipeline_out["entities"]).localCheckpoint()
-    log_dir = str(tmp_path / "qlog")
-
-    def ask(question):
-        return Q.local_query(spark, pipeline_out, question, vdb=vdb, log_dir=log_dir)
-
-    def cached():
-        """RDD id -> cached blocks, over the RDDs holding any."""
-        return {r.id(): r.numCachedPartitions() for r in jsc.getRDDStorageInfo()
-                if r.numCachedPartitions()}
-
-    ask("What is ENTITY_2 related to?")  # the log directory exists from here on
-    before = cached()
-    sc.setJobGroup("one-question", "local_query job budget")
+    group = f"one-question-{uuid.uuid4()}"  # the status store keeps old groups' jobs
+    sc.setJobGroup(group, "local_query job budget")
     try:
-        ask("What is ENTITY_1 related to?")
+        ask(question)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    jsc.listenerBus().waitUntilEmpty()
-    jobs = sc.statusTracker().getJobIdsForGroup("one-question")
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _warm_asker(spark, kg, tmp_path):
+    """A logged exact-mode asker over ``kg`` and its own VDB, after one
+    warm-up question on the hub, which looks up every KG table: each table's
+    first lookup also decides its path (index or Spark), with one more job.
+    The log directory exists from then on."""
+    vdb = Q.build_entity_vdb(kg["entities"]).localCheckpoint()
+    log_dir = str(tmp_path / "qlog")
+
+    def ask(question):
+        return Q.local_query(spark, kg, question, vdb=vdb, log_dir=log_dir)
+
+    ask("What is ENTITY_0 related to?")
+    assert all(kg[n] in Q._TABLES for n in ("entities", "edges", "chunks", "media_spans"))
+    return ask
+
+
+def test_local_query_job_budget_and_no_retained_blocks(spark, pipeline_out, tmp_path, scan_path):
+    """On the Spark path (a KG over the index budget) a logged exact-mode
+    question runs <= 7 Spark jobs (the ANN scan and the key-set lookups;
+    the log append runs none), and five questions leave no cached block
+    behind."""
+    ask = _warm_asker(spark, pipeline_out, tmp_path)
+    before = _cached(spark)
+    jobs = _jobs_of(spark, ask, "What is ENTITY_1 related to?")
     assert 0 < len(jobs) <= 7, jobs
     for k in range(5):
         ask(f"What is ENTITY_{k} related to?")
     # the session is shared: earlier tests' RDDs may be cleaned meanwhile,
     # but no RDD may gain a block
-    after = cached()
+    after = _cached(spark)
     assert all(after[i] == before.get(i) for i in after), (before, after)
+
+
+def test_local_query_on_indexed_kg_runs_no_job(spark, pipeline_out, tmp_path):
+    """Once a question has indexed the KG and the VDB on the driver, a
+    logged question runs no Spark job, and five questions leave no cached
+    block behind."""
+    ask = _warm_asker(spark, pipeline_out, tmp_path)
+    before = _cached(spark)
+    assert _jobs_of(spark, ask, "What is ENTITY_1 related to?") == []
+    for k in range(5):
+        ask(f"What is ENTITY_{k} related to?")
+    after = _cached(spark)
+    assert all(after[i] == before.get(i) for i in after), (before, after)
+
+
+def test_index_is_freed_with_its_dataframes(spark, pipeline_out, monkeypatch):
+    """The caches hold their DataFrames weakly: once a kg dict and its VDB
+    are gone, so is their index."""
+    monkeypatch.setattr(Q, "_TABLES", type(Q._TABLES)())  # empty, of the module's kind
+    monkeypatch.setattr(Q, "_VDBS", type(Q._VDBS)())
+    kg = {n: pipeline_out[n].select("*") for n in ("entities", "edges", "chunks", "media_spans")}
+    vdb = Q.build_entity_vdb(kg["entities"]).localCheckpoint()
+    out = Q.local_query(spark, kg, "What is ENTITY_1 related to?", vdb=vdb)
+    assert out["seeds"].count() > 0
+    assert len(Q._TABLES) >= 3 and len(Q._VDBS) == 1
+    refs = [weakref.ref(df) for df in [*kg.values(), vdb]]
+    del kg, vdb, out
+    gc.collect()
+    assert all(r() is None for r in refs)
+    assert len(Q._TABLES) == 0 and len(Q._VDBS) == 0
