@@ -530,22 +530,19 @@ def test_apply_cluster_fusion_cc_path_keeps_rename_pairs(spark):
     assert {g[0].src, g[0].tgt} == {'"I3X"', '"Person One"'}
 
 
-def test_pipeline_cluster_fuser_mode(spark, documents_df, pipeline_out):
-    """Pipeline wiring: cluster_fuser mode replaces the judge/contract tail —
-    merged names appear in the final entities, aliases map sources to the
-    final names, and blocks with no merge decisions pass through unchanged."""
-    from mmgraphrag_spark.pipeline import run_pipeline
+def _prefix_fuser(skip_types: tuple = ()):
+    """Merge each image entity with the first same-label text entity under
+    an invented FUSED_ name; image entities whose type is in ``skip_types``
+    are left out of every record. Class defined inside a function so
+    cloudpickle ships it by value to the workers."""
 
     class PrefixFuser:
-        """Merge each image entity with the first same-label text entity
-        under an invented FUSED_ name."""
-
         def fuse(self, clusters, image_entities):
             by_label = {c["label"]: c["text_entities"] for c in clusters}
             out = []
             for img in image_entities:
                 texts = by_label.get(img["label"])
-                if texts:
+                if texts and img["entity_type"] not in skip_types:
                     tname = texts[0]["entity_name"].strip('"')
                     out.append(
                         {
@@ -558,7 +555,16 @@ def test_pipeline_cluster_fuser_mode(spark, documents_df, pipeline_out):
                     )
             return out
 
-    out = run_pipeline(spark, documents_df, cluster_fuser=PrefixFuser())
+    return PrefixFuser()
+
+
+def test_pipeline_cluster_fuser_mode(spark, documents_df, pipeline_out):
+    """Pipeline wiring: cluster_fuser mode replaces the judge/contract tail —
+    merged names appear in the final entities, aliases map sources to the
+    final names, and blocks with no merge decisions pass through unchanged."""
+    from mmgraphrag_spark.pipeline import run_pipeline
+
+    out = run_pipeline(spark, documents_df, cluster_fuser=_prefix_fuser())
     names = {r.entity_name for r in out["entities"].collect()}
     fused = {n for n in names if n.startswith('"FUSED_')}
     assert fused, "expected at least one cluster-fused entity"
@@ -568,6 +574,32 @@ def test_pipeline_cluster_fuser_mode(spark, documents_df, pipeline_out):
     assert out["cluster_fused"].count() == len(fused) or out[
         "cluster_fused"
     ].count() >= len(fused)
+
+
+def test_pipeline_cluster_fuser_with_enhancer(spark, documents_df):
+    """L9 + L10 together: the fuser leaves every ORI_IMG entity out of its
+    records, so the enhancer renames those; the renames ride
+    apply_cluster_fusion's contraction, so each ENHANCED name is a final
+    entity and the alias map reaches it, next to the FUSED_ records."""
+    from mmgraphrag_spark.backends.llm import ChatClient, LLMEnhancer
+    from mmgraphrag_spark.pipeline import run_pipeline
+
+    client = ChatClient("http://fake", transport=_enhance_echo_transport())
+    out = run_pipeline(
+        spark,
+        documents_df,
+        cluster_fuser=_prefix_fuser(skip_types=('"ORI_IMG"',)),
+        enhancer=LLMEnhancer(client),
+    )
+    names = {r.entity_name for r in out["entities"].collect()}
+    assert any(n.startswith('"FUSED_') for n in names)
+    enhanced = {n for n in names if n.endswith(' ENHANCED"')}
+    assert enhanced, "expected the enhancer to rename an unaligned image entity"
+    ali = {(r.alias, r.canonical) for r in out["aliases"].collect()}
+    assert enhanced & {c for _, c in ali}
+    assert all(c in names for _, c in ali)
+    # a renamed entity is gone under its old name
+    assert not {a for a, c in ali if c in enhanced} & names
 
 
 def test_dbscan_eps_reference_semantics():
