@@ -15,6 +15,8 @@ the same way fusion blocks are capped.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -65,7 +67,9 @@ def word_shingle_positions(col: Column, n: int) -> Column:
 
 
 def minhash_sig(shingles: Column, seed: int) -> Column:
-    """One MinHash value: min over shingles of md5(seed || shingle)."""
+    """One MinHash value: min over shingles of md5("seed{seed}:" || shingle).
+    The lambda takes ONE argument: given two, F.transform would pass the
+    element index as the second and clobber a defaulted seed."""
     return F.array_min(
         F.transform(shingles, lambda s: F.md5(F.concat(F.lit(f"seed{seed}:"), s)))
     )
@@ -96,6 +100,34 @@ def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 # MinHash + LSH near-dup
 # ---------------------------------------------------------------------------
 
+def minhash_bands(
+    df: DataFrame,
+    shingles: Column,
+    keep: list,
+    bands: int = 4,
+    rows_per_band: int = 2,
+) -> DataFrame:
+    """LSH banding, the one implementation: ``keep`` (columns of ``df``)
+    plus ``band`` and ``sig``, one row per (input row, band). ``sig`` joins
+    the band's rows_per_band MinHash values with '|'; value r of band b is
+    :func:`minhash_sig` with seed ``b * rows_per_band + r``. Rows sharing
+    (band, sig) are candidates (standard banding estimate: P(collide) =
+    1-(1-j^r)^b)."""
+    base = df.select(*keep, shingles.alias("_sh"))
+    parts = [
+        base.select(
+            *base.columns[:-1],
+            F.lit(b).alias("band"),
+            F.concat_ws(
+                "|",
+                *[minhash_sig(F.col("_sh"), b * rows_per_band + r) for r in range(rows_per_band)],
+            ).alias("sig"),
+        )
+        for b in range(bands)
+    ]
+    return reduce(DataFrame.unionByName, parts)
+
+
 def minhash_signatures(
     df: DataFrame,
     id_col: str,
@@ -104,23 +136,15 @@ def minhash_signatures(
     rows_per_band: int = 2,
     shingle_len: int = 3,
 ) -> DataFrame:
-    """(id, band, sig): one row per (document, LSH band); sig concatenates the
-    band's rows_per_band minhashes. Documents sharing (band, sig) are near-dup
-    candidates (standard banding estimate: P(collide) = 1-(1-j^r)^b)."""
-    sh = word_shingles(F.col(text_col), shingle_len)
-    base = df.select(F.col(id_col).alias("id"), sh.alias("_sh"))
-    parts = []
-    for b in range(bands):
-        mins = [minhash_sig(F.col("_sh"), b * rows_per_band + r) for r in range(rows_per_band)]
-        parts.append(
-            base.select(
-                "id", F.lit(b).alias("band"), F.concat_ws("|", *mins).alias("sig")
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    """(id, band, sig): one row per (document, LSH band) over the document's
+    word shingles. Documents sharing (band, sig) are near-dup candidates."""
+    return minhash_bands(
+        df,
+        word_shingles(F.col(text_col), shingle_len),
+        [F.col(id_col).alias("id")],
+        bands=bands,
+        rows_per_band=rows_per_band,
+    )
 
 
 def lsh_candidate_pairs(

@@ -8,9 +8,16 @@ entity canonicalization.
 
 Spark-first re-expression (order-independent, per SURVEY §4 "sequential fold"
 hazard):
-  1. blocking     — neighborhood blocks (parity path, J3) or MinHash/LSH blocks
-                    (scale path), block size capped so the per-block O(n^3) eig
-                    stays bounded; hub-entity skew handled by the cap + AQE.
+  1. blocking     — one of three modes (pipeline ``blocking=``):
+                    "neighborhood" (parity path, J3): one block per image with
+                    the text entities within +-window chunks;
+                    "lsh" (scale path): MinHash/LSH bands over char n-grams of
+                    the normalized name (dedup.minhash_bands, the banding the
+                    near-dup operators use);
+                    "embedding": sign-bit buckets over name+description
+                    embeddings (paraphrases whose names share no characters).
+                    Block size is capped so the per-block O(n^3) eig stays
+                    bounded; hub-entity skew handled by the cap + AQE.
   2. clustering   — applyInPandas per block: block-local tf-idf embeddings,
                     cosine Gram (M2), edge reweighting (M3), unnormalized
                     Laplacian + eigh with the reference's abs() quirk (M4),
@@ -38,6 +45,7 @@ from pyspark.sql import functions as F
 
 from mmgraphrag_spark import GRAPH_FIELD_SEP
 from mmgraphrag_spark.functions import normalize_name
+from mmgraphrag_spark.operators.dedup import minhash_bands
 
 # ---------------------------------------------------------------------------
 # 1. Blocking
@@ -87,55 +95,6 @@ def neighborhood_blocks(
     ).distinct()
     return nearby.unionByName(img_nodes)
 
-def lsh_blocks(
-    entities: DataFrame,
-    text_col: str = "description",
-    shingle_len: int = 3,
-    bands: int = 4,
-    rows_per_band: int = 2,
-) -> DataFrame:
-    """Scale blocking: MinHash/LSH over word shingles of the entity text.
-
-    MinHash uses lexicographic-min of md5(seed || shingle) hex strings — a valid
-    random permutation per seed, fully JVM-side (md5 + array_min), identically
-    computable by an external SQL oracle. Each entity lands in `bands` blocks
-    keyed by the concatenation of its band's minhashes; candidate pairs are
-    entities sharing a block. Output: (block_id, entity_name, kind, description).
-    """
-    words = F.split(F.lower(F.regexp_replace(F.col(text_col), r"[^\w\s]", " ")), r"\s+")
-    shingles = F.when(F.size(words) >= shingle_len,
-        F.transform(
-            F.sequence(F.lit(0), F.size(words) - shingle_len),
-            lambda i: F.concat_ws(" ", F.slice(words, i + 1, shingle_len)),
-        )
-    ).otherwise(F.array(F.concat_ws(" ", words)))
-    df = entities.withColumn("_sh", F.array_distinct(shingles))
-    band_cols = []
-    for b in range(bands):
-        mins = [
-            F.array_min(
-                F.transform(
-                    F.col("_sh"),
-                    lambda s, seed=b * rows_per_band + r: F.md5(
-                        F.concat(F.lit(f"seed{seed}:"), s)
-                    ),
-                )
-            )
-            for r in range(rows_per_band)
-        ]
-        band_cols.append(F.concat_ws("|", F.lit(f"b{b}"), *mins).alias(f"_band{b}"))
-    df = df.select("*", *band_cols)
-    out = None
-    for b in range(bands):
-        part = df.select(
-            F.col(f"_band{b}").alias("block_id"),
-            "entity_name",
-            "kind",
-            "description",
-        )
-        out = part if out is None else out.unionByName(part)
-    return out
-
 def name_key_lsh_blocks(
     entities_with_kind: DataFrame,
     bands: int = 4,
@@ -146,7 +105,9 @@ def name_key_lsh_blocks(
     n-grams of the normalized entity name (parenthetical qualifiers stripped —
     the same normalization the judge applies). Identical normalized names
     share every band; near-variant names collide with banding probability.
-    Char n-grams via one regex-lookahead pass (no interpreted array lambdas).
+    Char n-grams via one regex-lookahead pass; the banding is
+    :func:`dedup.minhash_bands`, so block ``b{b}|<sig>`` holds the names
+    whose band-b signature is ``sig``.
 
     Input: (entity_name, kind, description); output (block_id, entity_name,
     kind, description) with one row per (entity, band).
@@ -154,32 +115,10 @@ def name_key_lsh_blocks(
     key = F.regexp_replace(normalize_name(F.col("entity_name")), r"\([^)]*\)$", "")
     grams = F.regexp_extract_all(key, F.lit(r"(?=(.{%d}))" % char_ngram), 1)
     sh = F.when(F.size(grams) > 0, F.array_distinct(grams)).otherwise(F.array(key))
-    df = entities_with_kind.withColumn("_sh", sh)
-    parts = []
-    for b in range(bands):
-        mins = [
-            F.array_min(
-                F.transform(
-                    F.col("_sh"),
-                    lambda s, seed=b * rows_per_band + r: F.md5(
-                        F.concat(F.lit(f"seed{seed}:"), s)
-                    ),
-                )
-            )
-            for r in range(rows_per_band)
-        ]
-        parts.append(
-            df.select(
-                F.concat_ws("|", F.lit(f"b{b}"), *mins).alias("block_id"),
-                "entity_name",
-                "kind",
-                "description",
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    keep = ["entity_name", "kind", "description"]
+    return minhash_bands(
+        entities_with_kind, sh, keep, bands=bands, rows_per_band=rows_per_band
+    ).select(F.format_string("b%d|%s", "band", "sig").alias("block_id"), *keep)
 
 
 def embedding_blocks(
@@ -840,25 +779,9 @@ def apply_cluster_fusion(
     )
     if extra_pairs is not None:
         pairs = pairs.unionByName(extra_pairs)
-    # Star fast-path (same probe as alias_map): records are disjoint stars
-    # unless a target is also someone's source or a source appears in two
-    # records — then resolve transitively, canonical = min target name in
-    # the component.
-    non_star = (
-        pairs.select(F.col("canonical").alias("x"))
-        .join(pairs.select(F.col("alias").alias("x")), "x", "left_semi")
-        .select(F.lit(1).alias("one"))
-        .unionAll(
-            pairs.groupBy("alias")
-            .agg(F.count_distinct("canonical").alias("c"))
-            .filter(F.col("c") > 1)
-            .select(F.lit(1).alias("one"))
-        )
-        .limit(1)
-        .count()
-        > 0
-    )
-    if non_star:
+    # records are disjoint stars unless a target is also someone's source or
+    # a source appears in two records — then resolve transitively
+    if not _disjoint_stars(pairs):
         # canonical per component: prefer a record target (img0), then a
         # node that was a canonical in the input pairs (e.g. an enhancer
         # rename target — a rename-only component has no record target and
@@ -947,15 +870,7 @@ def apply_cluster_fusion(
         )
         # a rename can collide with an existing node — re-merge those groups
         .groupBy("entity_name")
-        .agg(
-            F.min("entity_type").alias("entity_type"),
-            F.concat_ws(GRAPH_FIELD_SEP, _resplit_descs(F.col("description"))).alias(
-                "description"
-            ),
-            F.array_distinct(F.flatten(F.collect_list("source_ids"))).alias(
-                "source_ids"
-            ),
-        )
+        .agg(F.min("entity_type").alias("entity_type"), *_merged_attrs())
     )
     # rename only targets that SURVIVED contraction: under CC resolution a
     # record's target can itself be aliased into another component canonical
@@ -1081,21 +996,14 @@ def largest_connected_component(edges: DataFrame) -> DataFrame:
     return comp.join(F.broadcast(top), "component").select("entity_name")
 
 
-def alias_map(pairs: DataFrame, entities: DataFrame) -> DataFrame:
-    """Alias pairs -> transitive alias map (alias -> canonical).
-
-    Canonical per component prefers a non-image-typed member (the reference
-    merges image entities INTO text entities), then lexicographic-min name —
-    deterministic, replacing the reference's order-dependent sequential fold
-    (fusion.py:1004-1020; deviation documented in SURVEY §4).
-    """
-    # Fast path: valid only when the pairs form a union of DISJOINT stars —
-    # (a) no canonical also appears as an alias (no chains) AND (b) no alias
-    # maps to two different canonicals (an alias with two canonicals merges
-    # BOTH stars into one component, which the star shortcut would wrongly
-    # split). Both conditions probe in ONE driver action. Anything else takes
-    # the full CC loop.
-    non_star = (
+def _disjoint_stars(pairs: DataFrame) -> bool:
+    """True when (alias, canonical) pairs form a union of DISJOINT stars:
+    (a) no canonical also appears as an alias (no chains) AND (b) no alias
+    maps to two different canonicals (an alias with two canonicals merges
+    BOTH stars into one component, which a star shortcut would wrongly
+    split). Both conditions probe in ONE driver action; anything else needs
+    :func:`connected_components`."""
+    return (
         pairs.select(F.col("canonical").alias("x"))
         .join(pairs.select(F.col("alias").alias("x")), "x", "left_semi")
         .select(F.lit(1).alias("one"))
@@ -1107,9 +1015,20 @@ def alias_map(pairs: DataFrame, entities: DataFrame) -> DataFrame:
         )
         .limit(1)
         .count()
-        > 0
+        == 0
     )
-    if not non_star:
+
+
+def alias_map(pairs: DataFrame, entities: DataFrame) -> DataFrame:
+    """Alias pairs -> transitive alias map (alias -> canonical).
+
+    Canonical per component prefers a non-image-typed member (the reference
+    merges image entities INTO text entities), then lexicographic-min name —
+    deterministic, replacing the reference's order-dependent sequential fold
+    (fusion.py:1004-1020; deviation documented in SURVEY §4).
+    """
+    if _disjoint_stars(pairs):
+        # each star's canonical is its own component id
         comp = (
             pairs.select(F.col("alias").alias("entity_name"), F.col("canonical").alias("component"))
             .unionByName(
@@ -1143,10 +1062,16 @@ def alias_map(pairs: DataFrame, entities: DataFrame) -> DataFrame:
         .select(F.col("entity_name").alias("alias"), "canonical")
     )
 
-def _resplit_descs(col):
-    return F.array_sort(
-        F.array_distinct(F.flatten(F.collect_list(F.split(col, GRAPH_FIELD_SEP))))
-    )
+def _merged_attrs() -> list:
+    """The A2 re-merge aggregates of a group of merged nodes or edges: the
+    sorted union of their re-split descriptions and of their source ids."""
+    descs = F.flatten(F.collect_list(F.split("description", GRAPH_FIELD_SEP)))
+    return [
+        F.concat_ws(GRAPH_FIELD_SEP, F.array_sort(F.array_distinct(descs))).alias(
+            "description"
+        ),
+        F.array_distinct(F.flatten(F.collect_list("source_ids"))).alias("source_ids"),
+    ]
 
 def _rewrite_merge_edges(edges: DataFrame, mapping: DataFrame) -> DataFrame:
     """Rewrite edge endpoints through a tiny (alias, canonical) map
@@ -1174,12 +1099,7 @@ def _rewrite_merge_edges(edges: DataFrame, mapping: DataFrame) -> DataFrame:
         )
         .agg(
             F.sum("weight").alias("weight"),
-            F.concat_ws(GRAPH_FIELD_SEP, _resplit_descs(F.col("description"))).alias(
-                "description"
-            ),
-            F.array_distinct(F.flatten(F.collect_list("source_ids"))).alias(
-                "source_ids"
-            ),
+            *_merged_attrs(),
             F.min("order").alias("order"),
         )
         .select("src", "tgt", "weight", "description", "source_ids", "order")
@@ -1213,10 +1133,7 @@ def contract(
             )
             .getField("t")
             .alias("entity_type"),
-            F.concat_ws(GRAPH_FIELD_SEP, _resplit_descs(F.col("description"))).alias(
-                "description"
-            ),
-            F.array_distinct(F.flatten(F.collect_list("source_ids"))).alias("source_ids"),
+            *_merged_attrs(),
         )
     )
     return new_entities, new_edges

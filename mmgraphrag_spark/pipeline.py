@@ -201,90 +201,75 @@ def run_pipeline(
         M.summarize_long_descriptions(entities, backend=summarizer),
     )
 
-    # L9 cluster-fusion mode: the fuser's merged records (LLM-invented names
-    # + merged attrs) replace the pair-judge -> alias_map -> contract tail.
-    if cluster_fuser is not None:
-        merged = build_aliases(
+    return {
+        "spans": spans,
+        "chunks": chunks,
+        "media_spans": media,
+        "mentions": mentions,
+        "edges_prefusion": edges,
+        "checkpointer": cp,
+        **fuse(
             entities, edges, ents_m, img_ents_m, media, occurrences,
             window=fusion_window, max_block=max_block, checkpointer=cp,
-            blocking=blocking, cluster_fuser=cluster_fuser,
-        )
-        extra = None
-        if enhancer is not None:
-            # aligned = every entity named in a source list (incl. the img0
-            # target); the rest of the image entities are L10 candidates
-            aligned = merged.select(
+            blocking=blocking, judge_backend=judge_backend,
+            cluster_fuser=cluster_fuser, enhancer=enhancer,
+        ),
+    }
+
+
+def fuse(
+    entities: DataFrame,
+    edges: DataFrame,
+    ents_m: DataFrame,
+    img_ents_m: DataFrame,
+    media: DataFrame,
+    occurrences: DataFrame,
+    window: int = 1,
+    max_block: int = 2000,
+    checkpointer=None,
+    blocking: str = "neighborhood",
+    judge_backend=None,
+    cluster_fuser=None,
+    enhancer=None,
+) -> dict:
+    """The fusion tail of a batch build and of
+    ``IncrementalIndexer.finalize_fused``: :func:`build_aliases`, then the
+    optional L10 rewrite of unaligned image entities (descriptions apply
+    before contraction, renames ride it as extra alias pairs), then
+    contraction through the alias map (``FU.contract``) or, in L9 mode
+    (``cluster_fuser`` set), through the fuser's merged records
+    (``FU.apply_cluster_fusion``); committed as ``aliases``, ``entities``
+    and ``edges``. The result's ``entities_prefusion`` carries L10's
+    descriptions; L9 mode adds ``cluster_fused`` (the merged records)."""
+    cp = checkpointer or LocalCheckpointer()
+    found = build_aliases(
+        entities, edges, ents_m, img_ents_m, media, occurrences,
+        window=window, max_block=max_block, checkpointer=cp,
+        blocking=blocking, judge_backend=judge_backend,
+        cluster_fuser=cluster_fuser,
+    )
+    renames = None
+    if enhancer is not None:
+        # aligned = every alias, or in L9 mode every entity named in a
+        # merged record's source lists (incl. the img0 target); the other
+        # image entities are L10 candidates. Durable commit: enhancer output
+        # is LLM-paid and nondeterministic (see the alias_pairs rule)
+        aligned = found
+        if cluster_fuser is not None:
+            aligned = found.select(
                 F.explode(
                     F.concat("source_image_entities", "source_text_entities")
                 ).alias("alias")
             )
-            enh = cp.stage(
-                "enhanced_unaligned",
-                FU.enhance_unaligned(entities, aligned, enhancer),
-            )
-            entities = (
-                entities.join(
-                    enh.select("entity_name", "enhanced_description"),
-                    "entity_name",
-                    "left",
-                )
-                .withColumn(
-                    "description",
-                    F.coalesce(F.col("enhanced_description"), F.col("description")),
-                )
-                .drop("enhanced_description")
-            )
-            extra = enh.filter(
-                F.col("enhanced_name") != F.col("entity_name")
-            ).select(
-                F.col("entity_name").alias("alias"),
-                F.col("enhanced_name").alias("canonical"),
-            )
-        entities_f, edges_f, aliases = FU.apply_cluster_fusion(
-            entities, edges, merged, extra_pairs=extra
-        )
-        aliases = cp.stage_light("aliases", aliases)
-        entities_f = cp.stage("entities", entities_f)
-        edges_f = cp.stage("edges", edges_f)
-        triples = M.triples_view(edges_f)
-        return {
-            "spans": spans,
-            "chunks": chunks,
-            "media_spans": media,
-            "mentions": mentions,
-            "entities": entities_f,
-            "edges": edges_f,
-            "triples": triples,
-            "aliases": aliases,
-            "cluster_fused": merged,
-            "entities_prefusion": entities,
-            "edges_prefusion": edges,
-            "checkpointer": cp,
-        }
-
-    aliases = build_aliases(
-        entities, edges, ents_m, img_ents_m, media, occurrences,
-        window=fusion_window, max_block=max_block, checkpointer=cp,
-        blocking=blocking, judge_backend=judge_backend,
-    )
-    # L10: unaligned image entities optionally get an LLM rewrite — renames
-    # ride the existing alias/contraction machinery, description updates
-    # apply before contraction (offline default: keep their own names)
-    if enhancer is not None:
-        # durable: enhancer output is LLM-paid/nondeterministic (see
-        # alias_pairs rule); the rebuilt alias_map below is derived and light
         enh = cp.stage(
-            "enhanced_unaligned", FU.enhance_unaligned(entities, aliases, enhancer)
+            "enhanced_unaligned", FU.enhance_unaligned(entities, aligned, enhancer)
         )
         entities = (
             entities.join(
-                enh.select("entity_name", "enhanced_description"),
-                "entity_name",
-                "left",
+                enh.select("entity_name", "enhanced_description"), "entity_name", "left"
             )
             .withColumn(
-                "description",
-                F.coalesce(F.col("enhanced_description"), F.col("description")),
+                "description", F.coalesce("enhanced_description", "description")
             )
             .drop("enhanced_description")
         )
@@ -292,25 +277,29 @@ def run_pipeline(
             F.col("entity_name").alias("alias"),
             F.col("enhanced_name").alias("canonical"),
         )
-        all_pairs = aliases.unionByName(renames)
-        aliases = cp.stage_light("aliases", FU.alias_map(all_pairs, entities))
-    entities_f, edges_f = FU.contract(entities, edges, aliases)
+    out = {"entities_prefusion": entities}
+    if cluster_fuser is not None:
+        entities_f, edges_f, aliases = FU.apply_cluster_fusion(
+            entities, edges, found, extra_pairs=renames
+        )
+        aliases = cp.stage_light("aliases", aliases)
+        out["cluster_fused"] = found
+    else:
+        aliases = found
+        if renames is not None:
+            # the rebuilt alias map is derived from durable inputs: light
+            aliases = cp.stage_light(
+                "aliases", FU.alias_map(found.unionByName(renames), entities)
+            )
+        entities_f, edges_f = FU.contract(entities, edges, aliases)
     entities_f = cp.stage("entities", entities_f)
     edges_f = cp.stage("edges", edges_f)
-    triples = M.triples_view(edges_f)
-
     return {
-        "spans": spans,
-        "chunks": chunks,
-        "media_spans": media,
-        "mentions": mentions,
+        **out,
         "entities": entities_f,
         "edges": edges_f,
-        "triples": triples,
+        "triples": M.triples_view(edges_f),
         "aliases": aliases,
-        "entities_prefusion": entities,
-        "edges_prefusion": edges,
-        "checkpointer": cp,
     }
 
 
@@ -335,16 +324,8 @@ def build_aliases(
     is the merged-record DataFrame (durable-committed — LLM-paid) for
     :func:`operators.fusion.apply_cluster_fusion`, not an alias map.
 
-    blocking="neighborhood" (parity path): one block per media span containing
-    its image entities + text entities within ±window span offsets (J3).
-    blocking="lsh" (scale path): MinHash/LSH bands over char n-grams of the
-    normalized entity name — no positional constraint, suitable when the
-    corpus is too large to band-join per document or entities must be resolved
-    across documents.
-    blocking="embedding": sign-bit buckets over M1 embeddings of
-    name+description — catches paraphrased cross-modal duplicates whose
-    names share no characters (hash-embed offline; sentence-transformers
-    when installed).
+    ``blocking`` picks the candidate blocks ("neighborhood", "lsh" or
+    "embedding"; see the operators.fusion module docstring).
     """
     cp = checkpointer or LocalCheckpointer()
     # text entity occurrences: every (entity, source chunk) mention joined to the

@@ -25,40 +25,49 @@ def build_session(
 ) -> SparkSession:
     """Build a SparkSession.
 
-    In this sandbox we always run ``local[N]`` (single JVM); on a real cluster the
-    master is supplied by spark-submit and these configs carry over unchanged.
-    AQE is on so fusion-join skew is re-planned at runtime; Arrow is on because the
-    extractor/scene/fusion UDFs are all pandas/Arrow-batched (no per-row Python).
+    Run from plain python it is ``local[N]`` (single JVM). Under
+    spark-submit (``PYSPARK_GATEWAY_PORT`` set: the driver JVM is already up)
+    the master and every key spark-submit set are kept, and only the keys it
+    left unset get the values below. AQE is on so fusion-join skew is
+    re-planned at runtime; Arrow is on because the extractor/scene/fusion
+    UDFs are all pandas/Arrow-batched (no per-row Python).
     """
     if cpus is None:
         cpus = default_cpus()
     if shuffle_partitions is None:
         shuffle_partitions = max(cpus, 8)
-    builder = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
+    conf = {
+        "spark.master": f"local[{cpus}]",
+        "spark.app.name": app_name,
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "4096",
         # Keep the heap SMALL: on lazily-backed VMs, G1 young-gen size tracks
         # the heap and every collection touches fresh pages — measured 60M-row
         # md5 at local[32]: 8g=1.6s, 16g=6s, 24g=23s, 48g=10-70s. Checkpoint
         # blocks spill to disk via MEMORY_AND_DISK, so 8g is enough.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-    )
-    for k, v in (extra_conf or {}).items():
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
+        "spark.ui.enabled": "false",
+        "spark.ui.showConsoleProgress": "false",
+        "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+        **(extra_conf or {}),
+    }
+    if os.environ.get("PYSPARK_GATEWAY_PORT"):
+        # spark-submit's JVM holds its conf; connecting to it starts nothing.
+        # (Without spark-submit, reading SparkConf first would start a JVM
+        # without the driver heap set above.)
+        from pyspark import SparkConf, SparkContext
+
+        SparkContext._ensure_initialized()
+        submitted = SparkConf()
+        conf = {k: v for k, v in conf.items() if not submitted.contains(k)}
+    builder = SparkSession.builder
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-def get_test_session() -> SparkSession:
-    """Session used by pytest (shared across tests)."""
-    return build_session("mmgraphrag_spark_tests", shuffle_partitions=16)

@@ -269,11 +269,12 @@ class IncrementalIndexer:
         judge_backend=None,
         cluster_fuser=None,
     ) -> dict:
-        """Full §2.10 closure: run the SAME fusion stages the batch pipeline
-        runs (blocking -> spectral -> judge -> CC -> contraction,
-        pipeline.build_aliases) over the accumulated state, yielding canonical
+        """Full §2.10 closure: the batch pipeline's own fusion tail
+        (``pipeline.fuse``) over the accumulated state, yielding canonical
         entities/edges/triples identical to a fresh batch run over every
-        document seen so far (asserted through ``triples`` in test_streaming).
+        document seen so far (asserted through ``triples`` in
+        test_streaming). Its ``aliases``, ``entities`` and ``edges`` are
+        in-memory stage commits, computed before this returns.
 
         Fusion itself is a rerun over the final state, not an incremental
         delta — alias decisions are global (a batch-3 entity can alias a
@@ -281,8 +282,7 @@ class IncrementalIndexer:
         closed clusters anyway. The state keeps exactly the fusion inputs
         (mention occurrence sets + positions), so the rerun never touches the
         raw documents."""
-        from mmgraphrag_spark.operators import fusion as FU
-        from mmgraphrag_spark.pipeline import build_aliases
+        from mmgraphrag_spark.pipeline import fuse
 
         entities, edges = self.finalize()
         entities = entities.localCheckpoint()
@@ -300,31 +300,11 @@ class IncrementalIndexer:
                 "chunk_occ) for at least one committed batch; re-index with "
                 "this version to use finalize_fused"
             )
-        if cluster_fuser is not None:
-            # L9 mode: mirror pipeline.kg_pipeline's cluster-fusion tail —
-            # one fuser call per block, merged records applied with
-            # merge_graphs semantics instead of pair-judge + contraction.
-            merged = build_aliases(
-                entities, edges, text_ment, img_ment, media_occ, chunk_occ,
-                window=window, max_block=max_block, blocking=blocking,
-                cluster_fuser=cluster_fuser,
-            )
-            entities_f, edges_f, aliases = FU.apply_cluster_fusion(
-                entities, edges, merged
-            )
-        else:
-            aliases = build_aliases(
-                entities, edges, text_ment, img_ment, media_occ, chunk_occ,
-                window=window, max_block=max_block, blocking=blocking,
-                judge_backend=judge_backend,
-            )
-            entities_f, edges_f = FU.contract(entities, edges, aliases)
-        return {
-            "entities": entities_f,
-            "edges": edges_f,
-            "triples": M.triples_view(edges_f),
-            "aliases": aliases,
-        }
+        return fuse(
+            entities, edges, text_ment, img_ment, media_occ, chunk_occ,
+            window=window, max_block=max_block, blocking=blocking,
+            judge_backend=judge_backend, cluster_fuser=cluster_fuser,
+        )
 
 
 def incremental_index_stream(

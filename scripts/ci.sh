@@ -11,7 +11,10 @@ set -euo pipefail
 cd "$(dirname "$0")/.."
 
 echo "== pytest =="
-python -m pytest tests/ -x -q
+# as the tier-1 gate runs it: Spark scratch in one local dir, a hard time
+# limit, no .pytest_cache left in the tree
+SPARK_LOCAL_DIRS="${SPARK_LOCAL_DIRS:-/tmp/spark-local}" timeout -k 10 2670 \
+  python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
 
 echo "== oracle parity @ sf0.01 =="
 python scripts/check_oracles.py /root/testdata/sf0.01
@@ -27,6 +30,11 @@ printf 'What is ENTITY_1 related to?\n' > /tmp/ci_questions.txt
 python scripts/query_job.py --kg /tmp/ci_kg --questions-file /tmp/ci_questions.txt \
   --ann-mode ivf > /tmp/ci_answer.txt
 grep -q "ANSWER:" /tmp/ci_answer.txt
+# the same query CLI under spark-submit: build_session keeps its master
+SPARK_SUBMIT="$(python -c 'import os, pyspark; print(os.path.join(os.path.dirname(pyspark.__file__), "bin", "spark-submit"))')"
+"$SPARK_SUBMIT" --master 'local[2]' scripts/query_job.py --kg /tmp/ci_kg \
+  --questions-file /tmp/ci_questions.txt > /tmp/ci_answer_submit.txt
+grep -q "ANSWER:" /tmp/ci_answer_submit.txt
 
 if [[ "${1:-}" != "--quick" ]]; then
   echo "== oracle parity @ sf0.1 =="

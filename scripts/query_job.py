@@ -54,13 +54,9 @@ def main() -> None:
     if not questions:
         p.error("provide --question and/or --questions-file")
 
-    from pyspark.sql import SparkSession
+    from mmgraphrag_spark.session import build_session
 
-    spark = (
-        SparkSession.builder.appName("mmgraphrag_spark_query")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .getOrCreate()
-    )
+    spark = build_session("mmgraphrag_spark_query")
 
     from mmgraphrag_spark.query import local_query
 

@@ -94,16 +94,9 @@ def main() -> None:
                    help="window overlap in tokens (reference chunk_overlap_token_size)")
     args = p.parse_args()
 
-    from pyspark.sql import SparkSession
+    from mmgraphrag_spark.session import build_session
 
-    builder = (
-        SparkSession.builder.appName("mmgraphrag_spark_index")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-    )
-    spark = builder.getOrCreate()
+    spark = build_session("mmgraphrag_spark_index")
 
     from mmgraphrag_spark.pipeline import run_pipeline
     from mmgraphrag_spark.plans import ParquetCheckpointer

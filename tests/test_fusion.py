@@ -145,23 +145,42 @@ def test_contract_drops_self_loops(spark):
     assert edgs.count() == 0
 
 
-def test_lsh_blocks_group_similar_text(spark):
+def test_name_key_lsh_blocks_pinned_ids(spark):
+    """Identical normalized names share every band, and each block id is
+    ``b{b}|`` + the '|'-joined band minima of md5("seed{n}:" + gram) over
+    the name's char 3-grams, n = b * rows_per_band + r — a pure function of
+    the name, whatever ran in the session before."""
+    import hashlib
+
+    bands, rows = 4, 2
     entities = spark.createDataFrame(
         [
-            ('"X"', "text", "the quick brown fox jumps over the lazy dog"),
-            ('"Y"', "img", "the quick brown fox jumps over the lazy dog"),
-            ('"Z"', "text", "completely different words entirely unrelated content"),
+            ('"Quick Fox"', "text", "a"),
+            ('"quickfox (IMAGE)"', "img", "b"),
+            ('"Lazy Dog"', "text", "c"),
         ],
         ["entity_name", "kind", "description"],
     )
-    blocks = FU.lsh_blocks(entities)
-    xy = (
-        blocks.groupBy("block_id")
-        .agg(F.collect_set("entity_name").alias("names"))
-        .filter(F.array_contains("names", '"X"') & F.array_contains("names", '"Y"'))
-        .count()
-    )
-    assert xy > 0  # identical text always shares all bands
+    got = {}
+    for r in FU.name_key_lsh_blocks(entities, bands=bands, rows_per_band=rows).collect():
+        got.setdefault(r.entity_name, set()).add(r.block_id)
+
+    def expected(key):
+        grams = {key[i : i + 3] for i in range(len(key) - 2)}
+        return {
+            f"b{b}|"
+            + "|".join(
+                min(
+                    hashlib.md5(f"seed{b * rows + r}:{g}".encode()).hexdigest()
+                    for g in grams
+                )
+                for r in range(rows)
+            )
+            for b in range(bands)
+        }
+
+    assert got['"Quick Fox"'] == got['"quickfox (IMAGE)"'] == expected("quickfox")
+    assert got['"Lazy Dog"'] == expected("lazydog")
 
 
 def test_embedding_blocks_recall_with_semantic_backend(spark):
