@@ -9,8 +9,10 @@ entity canonicalization.
 Spark-first re-expression (order-independent, per SURVEY §4 "sequential fold"
 hazard):
   1. blocking     — one of three modes (pipeline ``blocking=``):
-                    "neighborhood" (parity path, J3): one block per image with
-                    the text entities within +-window chunks;
+                    "neighborhood" (parity path, J3): one block per media
+                    span with its image entities and the text entities
+                    mentioned within +-window chunks in the same doc, blocked
+                    from positions only (descriptions join once, after);
                     "lsh" (scale path): MinHash/LSH bands over char n-grams of
                     the normalized name (dedup.minhash_bands, the banding the
                     near-dup operators use);
@@ -52,48 +54,36 @@ from mmgraphrag_spark.operators.dedup import minhash_bands
 # ---------------------------------------------------------------------------
 
 def neighborhood_blocks(
-    img_members: DataFrame,
-    text_entity_occurrences: DataFrame,
+    img_pos: DataFrame,
+    text_pos: DataFrame,
     window: int = 1,
 ) -> DataFrame:
-    """Parity blocking: one block per media span (= per image, like the
-    reference's per-image fusion loop), containing the image's entities plus
-    text entities sourced from chunks within +-window offsets in the same doc.
+    """Parity blocking (J3): one block per media span (= per image, like the
+    reference's per-image fusion loop), holding the image's entities plus the
+    text entities mentioned in chunks within +-window offsets in the same doc.
 
-    img_members: (block_id=media_ref, doc_id, chunk_order_index, entity_name,
-                  description)
-    text_entity_occurrences: (entity_name, description, doc_id,
-                  chunk_order_index) — one row per source-chunk occurrence.
+    img_pos: (block_id=media_ref, doc_id, chunk_order_index, entity_name)
+    text_pos: (entity_name, doc_id, chunk_order_index) — one row per mention
+    occurrence. Returns distinct (block_id, entity_name, kind); an entity that
+    is both an image and a nearby text member of one block keeps both rows.
 
-    The join is an equi-join on doc_id plus a band predicate on the offset (J3)
-    — Catalyst plans it as a shuffle join on doc_id; blocks never cross docs.
+    The band join is an equi-join on doc_id plus a predicate on the offset;
+    blocks never cross docs. Its image side (one row per media span) is
+    broadcast: both inputs are small and unmaterialized here, and an
+    unpinned join builds on whichever input stage AQE sees finish first.
     """
-    img = img_members.select(
-        F.col("block_id"),
-        F.col("doc_id"),
-        F.col("chunk_order_index").alias("img_idx"),
-    ).distinct()
-    t = text_entity_occurrences.select(
-        F.col("doc_id"),
-        F.col("chunk_order_index").alias("txt_idx"),
-        "entity_name",
-        "description",
+    img = F.broadcast(
+        img_pos.select(
+            "block_id", "doc_id", F.col("chunk_order_index").alias("img_idx")
+        ).distinct()
     )
     nearby = (
-        img.join(t, "doc_id")
-        .filter(F.abs(F.col("txt_idx") - F.col("img_idx")) <= window)
-        .select(
-            "block_id",
-            "entity_name",
-            F.lit("text").alias("kind"),
-            "description",
-        )
-        .distinct()
+        text_pos.join(img, "doc_id")
+        .filter(F.abs(F.col("chunk_order_index") - F.col("img_idx")) <= window)
+        .select("block_id", "entity_name", F.lit("text").alias("kind"))
     )
-    img_nodes = img_members.select(
-        "block_id", "entity_name", F.lit("img").alias("kind"), "description"
-    ).distinct()
-    return nearby.unionByName(img_nodes)
+    img_nodes = img_pos.select("block_id", "entity_name", F.lit("img").alias("kind"))
+    return nearby.unionByName(img_nodes).distinct()
 
 def name_key_lsh_blocks(
     entities_with_kind: DataFrame,

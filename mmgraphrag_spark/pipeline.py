@@ -328,36 +328,6 @@ def build_aliases(
     "embedding"; see the operators.fusion module docstring).
     """
     cp = checkpointer or LocalCheckpointer()
-    # text entity occurrences: every (entity, source chunk) mention joined to the
-    # chunk's per-doc occurrence positions (handles deduplicated chunks that
-    # occur in several docs)
-    text_occ = (
-        ents_m.select("entity_name", F.col("source_id").alias("chunk_id"))
-        .distinct()
-        .join(
-            occurrences.select("chunk_id", "doc_id", "chunk_order_index"),
-            "chunk_id",
-        )
-        .join(entities.select("entity_name", "description"), "entity_name")
-        .select("entity_name", "description", "doc_id", "chunk_order_index")
-    )
-    # image-side members: all entities sourced from each media span, positioned
-    # at the media span's offset
-    img_members = (
-        img_ents_m.select("entity_name", F.col("source_id").alias("media_ref"))
-        .distinct()
-        .join(
-            media.select("media_ref", "doc_id", "chunk_order_index"), "media_ref"
-        )
-        .join(entities.select("entity_name", "description"), "entity_name")
-        .select(
-            F.col("media_ref").alias("block_id"),
-            "doc_id",
-            "chunk_order_index",
-            "entity_name",
-            "description",
-        )
-    )
     if blocking in ("lsh", "embedding"):
         typed = entities.withColumn(
             "kind",
@@ -371,7 +341,28 @@ def build_aliases(
         else:  # embedding-similarity blocking (M1 backend seam)
             members = FU.embedding_blocks(typed)
     else:
-        members = FU.neighborhood_blocks(img_members, text_occ, window=window)
+        # positions only: each text mention at its chunk's per-doc offsets (a
+        # deduplicated chunk occurs in several docs), each image entity at its
+        # media span's offset (media: one row per span, broadcast); the
+        # descriptions join once, after blocking
+        text_pos = (
+            ents_m.select("entity_name", F.col("source_id").alias("chunk_id"))
+            .join(occurrences, "chunk_id")
+            .select("entity_name", "doc_id", "chunk_order_index")
+        )
+        img_pos = img_ents_m.select(
+            "entity_name", F.col("source_id").alias("block_id")
+        ).join(
+            F.broadcast(media.select(
+                F.col("media_ref").alias("block_id"), "doc_id", "chunk_order_index"
+            )),
+            "block_id",
+        )
+        members = (
+            FU.neighborhood_blocks(img_pos, text_pos, window=window)
+            .join(entities.select("entity_name", "description"), "entity_name")
+            .select("block_id", "entity_name", "kind", "description")
+        )
     # split-visibility: an Observation rides the stage-commit action (zero
     # extra jobs) and warns when blocks overflowed max_block — a repeatedly
     # splitting band is a blocking-key problem, not something to salt away

@@ -50,14 +50,8 @@ class LocalCheckpointer:
     # an Observation attached to the staged plan (see pipeline.build_aliases)
     eager_stages = True
 
-    def __init__(self):
-        self.stages: dict[str, dict] = {}
-
     def stage(self, name: str, df: DataFrame) -> DataFrame:
-        t0 = time.monotonic()
-        out = df.localCheckpoint()
-        self.stages[name] = {"seconds": round(time.monotonic() - t0, 3)}
-        return out
+        return df.localCheckpoint()
 
     # tiny stages need only the plan cut, never durability
     stage_light = stage

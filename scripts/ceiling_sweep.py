@@ -26,13 +26,14 @@ Appends a table + summary to BENCH.md.
 from __future__ import annotations
 
 import json
+import os
 import statistics
 import sys
 import time
 
-sys.path.insert(0, "/root/repo/scripts")
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from host_ceiling_control import run_at
+from host_ceiling_control import ROOT, run_at
 
 
 def main() -> None:
@@ -93,7 +94,7 @@ Spark job (zero shuffle / zero Python / zero IO whole-stage-codegen scan-agg)
 {min(effs):.3f}-{max(effs):.3f}; {summary['below_0.8']}/{k} pairings below the 0.8
 criterion.**
 """
-    with open("/root/repo/BENCH.md", "a") as f:
+    with open(os.path.join(ROOT, "BENCH.md"), "a") as f:
         f.write(section)
     print("appended to BENCH.md")
 

@@ -20,10 +20,13 @@ import subprocess
 import sys
 import time
 
+# the repo root; each `python -c` child gets it as argv[1] for its sys.path
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 RUNNER = """
 import os, time
 import sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, sys.argv[1])
 from mmgraphrag_spark.session import build_session
 from pyspark.sql import functions as F
 cpus = int(os.environ["CTRL_CPUS"])
@@ -44,7 +47,7 @@ spark.stop()
 def run_at(cpus: int, rows: int) -> float:
     env = dict(os.environ, CTRL_CPUS=str(cpus), CTRL_ROWS=str(rows))
     out = subprocess.run(
-        [sys.executable, "-c", RUNNER], env=env, capture_output=True, text=True,
+        [sys.executable, "-c", RUNNER, ROOT], env=env, capture_output=True, text=True,
         timeout=1800,
     )
     for line in out.stdout.splitlines():

@@ -18,9 +18,12 @@ import subprocess
 import sys
 import tempfile
 
+# the repo root; each `python -c` child gets it as argv[1] for its sys.path
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 SETUP = """
 import json, os, sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, sys.argv[1])
 from mmgraphrag_spark.session import build_session
 from mmgraphrag_spark.operators import spans as S
 from mmgraphrag_spark.sources.documents import interleave_from_flat
@@ -37,7 +40,7 @@ spark.stop()
 
 RUNNER = """
 import json, os, sys, time
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, sys.argv[1])
 from pyspark.sql import functions as F
 from mmgraphrag_spark.session import build_session
 from mmgraphrag_spark.operators.extract import DeterministicExtractor
@@ -82,12 +85,12 @@ def main() -> None:
     snap = tempfile.mkdtemp(prefix="mprof_snap_")
     env = dict(os.environ, SF_DIR=sf_dir, REPLICAS=replicas,
                SNAP=os.path.join(snap, "chunk_rows"))
-    subprocess.run([sys.executable, "-c", SETUP], env=env, check=True,
+    subprocess.run([sys.executable, "-c", SETUP, ROOT], env=env, check=True,
                    capture_output=True, text=True, timeout=1800)
     results = {}
     for cpus in cpu_list:
         env2 = dict(env, CPUS=str(cpus), OUT=os.path.join(snap, f"out_{cpus}"))
-        out = subprocess.run([sys.executable, "-c", RUNNER], env=env2,
+        out = subprocess.run([sys.executable, "-c", RUNNER, ROOT], env=env2,
                              capture_output=True, text=True, timeout=3600)
         for line in out.stdout.splitlines():
             if line.startswith("RESULT "):

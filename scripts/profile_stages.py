@@ -21,9 +21,12 @@ import os
 import subprocess
 import sys
 
+# the repo root; each `python -c` child gets it as argv[1] for its sys.path
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 RUNNER = """
 import json, os, sys, tempfile, time
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, sys.argv[1])
 from mmgraphrag_spark.session import build_session
 from mmgraphrag_spark.pipeline import run_pipeline
 from mmgraphrag_spark.plans import ParquetCheckpointer
@@ -73,7 +76,7 @@ def run_at(cpus: int, sf_dir: str, replicas: int) -> dict:
         SPARK_GRAFT_REPLICAS=str(replicas),
     )
     out = subprocess.run(
-        [sys.executable, "-c", RUNNER], env=env, capture_output=True, text=True,
+        [sys.executable, "-c", RUNNER, ROOT], env=env, capture_output=True, text=True,
         timeout=3600,
     )
     for line in out.stdout.splitlines():

@@ -27,9 +27,12 @@ import os
 import subprocess
 import sys
 
+# the repo root; each `python -c` child gets it as argv[1] for its sys.path
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 RUNNER = """
 import json, os, sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, sys.argv[1])
 from mmgraphrag_spark.session import build_session
 from bench import run_kg_pipeline
 cpus = int(os.environ["SPARK_GRAFT_CPUS"])
@@ -52,7 +55,7 @@ def run_at(cpus: int, sf_dir: str, replicas: int) -> dict:
         SPARK_GRAFT_REPLICAS=str(replicas),
     )
     out = subprocess.run(
-        [sys.executable, "-c", RUNNER], env=env, capture_output=True, text=True,
+        [sys.executable, "-c", RUNNER, ROOT], env=env, capture_output=True, text=True,
         # 2-core leg at 12M docs measured as slow as 7.2k docs/s in a heavy
         # host window (~28 min), and the 1-core leg at 18M docs projects to
         # ~31 min plus up to +40% host noise; anything tighter risks killing
@@ -118,7 +121,7 @@ ratio (see the bandwidth-contention finding above):
 mean = {mean_eff:.3f}** (north-rule target: >= 0.8). Closing probe after
 leg 4 at {order[-1]} threads: {cap_post} Mrows/s.
 """
-    with open("/root/repo/BENCH.md", "a") as f:
+    with open(os.path.join(ROOT, "BENCH.md"), "a") as f:
         f.write(section)
     print("appended to BENCH.md")
 
@@ -158,7 +161,7 @@ stand-in for N vs 4N executors:
 **Scaling efficiency (throughput_{hi} / (4 x throughput_{lo})) = {eff:.3f}**
 (north-rule target: >= 0.8)
 """
-    with open("/root/repo/BENCH.md", "a") as f:
+    with open(os.path.join(ROOT, "BENCH.md"), "a") as f:
         f.write(section)
     print("appended to BENCH.md")
 

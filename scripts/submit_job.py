@@ -3,7 +3,7 @@
 Launch on a cluster (the master/deploy-mode come from spark-submit; the
 session builder adds no master when one is already set):
 
-    cd /root/repo && zip -r /tmp/mmgraphrag_spark.zip mmgraphrag_spark
+    zip -r /tmp/mmgraphrag_spark.zip mmgraphrag_spark
     spark-submit --py-files /tmp/mmgraphrag_spark.zip \
         scripts/submit_job.py \
         --input  s3://bucket/documents_iceberg_or_parquet \

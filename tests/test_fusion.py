@@ -9,24 +9,89 @@ from mmgraphrag_spark.operators import fusion as FU
 
 
 def test_neighborhood_blocks(spark):
-    img_members = spark.createDataFrame(
-        [("img://d1/0", "d1", 2, '"E1 (IMAGE)"', "img desc")],
-        ["block_id", "doc_id", "chunk_order_index", "entity_name", "description"],
+    img_pos = spark.createDataFrame(
+        [("img://d1/0", "d1", 2, '"E1 (IMAGE)"'), ("img://d1/0", "d1", 2, '"BOTH"')],
+        ["block_id", "doc_id", "chunk_order_index", "entity_name"],
     )
-    text_occ = spark.createDataFrame(
+    text_pos = spark.createDataFrame(
         [
-            ('"NEAR"', "near desc", "d1", 1),
-            ('"EXACT"', "exact desc", "d1", 2),
-            ('"FAR"', "far desc", "d1", 5),
-            ('"OTHERDOC"', "other", "d2", 2),
+            ('"NEAR"', "d1", 1),
+            ('"EXACT"', "d1", 2),
+            ('"EXACT"', "d1", 3),  # a second nearby mention: still one row
+            ('"BOTH"', "d1", 3),
+            ('"FAR"', "d1", 5),
+            ('"OTHERDOC"', "d2", 2),
         ],
-        ["entity_name", "description", "doc_id", "chunk_order_index"],
+        ["entity_name", "doc_id", "chunk_order_index"],
     )
-    members = FU.neighborhood_blocks(img_members, text_occ, window=1).collect()
-    names = {(r.entity_name, r.kind) for r in members}
-    assert ('"NEAR"', "text") in names and ('"EXACT"', "text") in names
-    assert ('"E1 (IMAGE)"', "img") in names
-    assert not any(n in {'"FAR"', '"OTHERDOC"'} for n, _ in names)
+    members = FU.neighborhood_blocks(img_pos, text_pos, window=1).collect()
+    assert sorted(tuple(r) for r in members) == [
+        ("img://d1/0", '"BOTH"', "img"),
+        ("img://d1/0", '"BOTH"', "text"),
+        ("img://d1/0", '"E1 (IMAGE)"', "img"),
+        ("img://d1/0", '"EXACT"', "text"),
+        ("img://d1/0", '"NEAR"', "text"),
+    ]
+
+
+def test_fusion_blocks_carry_descriptions(spark):
+    """build_aliases' neighborhood blocks: every member carries its entity's
+    description (joined once, after blocking); an entity that is both an
+    image and a nearby text member of one block keeps both rows; a chunk
+    that occurs in two docs places its mentions at both docs' offsets."""
+    from mmgraphrag_spark.pipeline import build_aliases
+    from mmgraphrag_spark.plans import LocalCheckpointer
+
+    class Recording(LocalCheckpointer):
+        def __init__(self):
+            super().__init__()
+            self.rows = {}
+
+        def stage(self, name, df):
+            out = super().stage(name, df)
+            self.rows[name] = sorted(tuple(r) for r in out.collect())
+            return out
+
+        stage_light = stage
+
+    entities = spark.createDataFrame(
+        [
+            ('"BOTH"', '"PERSON"', "both desc"),
+            ('"NEAR"', '"GEO"', "near desc"),
+            ('"FAR"', '"GEO"', "far desc"),
+            ('"E1 (IMAGE)"', '"IMG_ENTITY"', "img desc"),
+        ],
+        ["entity_name", "entity_type", "description"],
+    )
+    edges = spark.createDataFrame([], "src string, tgt string, weight double")
+    ents_m = spark.createDataFrame(
+        [('"BOTH"', "c1"), ('"NEAR"', "c2"), ('"FAR"', "c3")],
+        ["entity_name", "source_id"],
+    )
+    img_ents_m = spark.createDataFrame(
+        [('"E1 (IMAGE)"', "m1"), ('"BOTH"', "m1"), ('"E1 (IMAGE)"', "m2")],
+        ["entity_name", "source_id"],
+    )
+    media = spark.createDataFrame(
+        [("m1", "d1", 2), ("m2", "d2", 7)],
+        ["media_ref", "doc_id", "chunk_order_index"],
+    )
+    occurrences = spark.createDataFrame(
+        [("c1", "d1", 2), ("c2", "d1", 1), ("c2", "d2", 8), ("c3", "d1", 9)],
+        ["chunk_id", "doc_id", "chunk_order_index"],
+    )
+    cp = Recording()
+    build_aliases(
+        entities, edges, ents_m, img_ents_m, media, occurrences, checkpointer=cp
+    )
+    assert cp.rows["fusion_blocks"] == [
+        ("m1#0", '"BOTH"', "img", "both desc"),
+        ("m1#0", '"BOTH"', "text", "both desc"),
+        ("m1#0", '"E1 (IMAGE)"', "img", "img desc"),
+        ("m1#0", '"NEAR"', "text", "near desc"),
+        ("m2#0", '"E1 (IMAGE)"', "img", "img desc"),
+        ("m2#0", '"NEAR"', "text", "near desc"),
+    ]
 
 
 def test_cap_blocks(spark):

@@ -122,6 +122,73 @@ def test_apply_cluster_fusion_broadcasts_small_side(spark):
     assert "BroadcastHashJoin" in _plan(ents)
 
 
+def test_fusion_blocks_build_on_image_side(spark):
+    """Neighborhood blocking builds both of its joins on the image side, which
+    holds one row per media span by design: the media_ref join broadcasts
+    the media positions, the doc_id band join the distinct image positions.
+    Both inputs are small and unmaterialized, so an unpinned join is built
+    on whichever input stage AQE sees finish first, and the job count of a
+    build varied from run to run. The size threshold is off here (at scale
+    neither side is under it), so only these hints can plan a broadcast hash
+    join, and each must build on a side with block_id and no entity_name."""
+    from mmgraphrag_spark.pipeline import build_aliases
+    from mmgraphrag_spark.plans import LocalCheckpointer
+
+    class Captured(Exception):
+        pass
+
+    class Capture(LocalCheckpointer):
+        def stage(self, name, df):
+            if name == "fusion_blocks":
+                raise Captured(df)
+            return super().stage(name, df)
+
+        stage_light = stage
+
+    entities = spark.createDataFrame(
+        [('"T"', '"PERSON"', "t"), ('"I"', '"IMG_ENTITY"', "i")],
+        ["entity_name", "entity_type", "description"],
+    )
+    edges = spark.createDataFrame([], "src string, tgt string, weight double")
+    ents_m = spark.createDataFrame([('"T"', "c1")], ["entity_name", "source_id"])
+    img_ents_m = spark.createDataFrame([('"I"', "m1")], ["entity_name", "source_id"])
+    media = spark.createDataFrame(
+        [("m1", "d1", 1)], ["media_ref", "doc_id", "chunk_order_index"]
+    )
+    occ = spark.createDataFrame(
+        [("c1", "d1", 0)], ["chunk_id", "doc_id", "chunk_order_index"]
+    )
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        try:
+            build_aliases(
+                entities, edges, ents_m, img_ents_m, media, occ, checkpointer=Capture()
+            )
+        except Captured as c:
+            blocks = c.args[0]
+        plan = blocks._jdf.queryExecution().executedPlan()
+        if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+            plan = plan.initialPlan()
+        build_sides = []
+        nodes = [plan]
+        while nodes:
+            node = nodes.pop()
+            kids = node.children()
+            nodes.extend(kids.apply(i) for i in range(kids.size()))
+            if node.getClass().getSimpleName() == "BroadcastHashJoinExec":
+                build = node.right() if "Right" in node.buildSide().toString() else node.left()
+                out = build.output()
+                build_sides.append({out.apply(i).name() for i in range(out.size())})
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    # the band join, and the media join of each img_pos derivation
+    assert any("img_idx" in cols for cols in build_sides), build_sides
+    assert any("img_idx" not in cols for cols in build_sides), build_sides
+    for cols in build_sides:
+        assert "block_id" in cols and "entity_name" not in cols, cols
+
+
 def test_lsh_pairs_equi_join_only(spark):
     """MinHash LSH candidate generation must be a pure equi-join on the
     (band, sig) bucket key — no nested loop anywhere."""
